@@ -33,6 +33,7 @@ object BottomK {
 
   /** Sorted distinct bottom-`cap` buffer. */
   final class LongBottomSet(val cap: Int) extends Serializable {
+    require(cap > 0, s"LongBottomSet cap must be positive, got $cap")
     var arr: Array[Long] = new Array[Long](cap)
     var n: Int = 0
 

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.LoopScope
 import graft.util.Tables._
 
 /** Graph analytics over relations (no GraphX dependency — the
@@ -141,71 +142,56 @@ object Graph {
     * is a derived index a pipeline queries many times). Distances are
     * exact integers — no float-tie surface.
     */
-  def bfsHops(s: SparkSession, d: String): DataFrame = {
-    var toRelease: List[DataFrame] = Nil
-    val dists = graft.util.ScratchIndex.materialize(
-        s, s"bfshops_v1_${graft.util.ScratchIndex.corpusTag(d)}") {
-      val (visited, counts, acquired) = bfsWalk(s, d)
-      toRelease = acquired
-      // one log line per corpus build: the per-hop frontier sizes ARE
-      // the shuffle bound (each hop shuffles O(frontier × avg-degree)
-      // rows) — surfacing them makes the claim checkable in any run log
-      System.err.println(
-        s"[graph] bfs frontier sizes by hop (corpus $d): " +
-          counts.mkString(", "))
-      visited
-    }
-    toRelease.foreach(_.unpersist())
-    dists.orderBy("v")
-  }
+  def bfsHops(s: SparkSession, d: String): DataFrame =
+    LoopScope.scoped { sc =>
+      graft.util.ScratchIndex.materialize(
+          s, s"bfshops_v1_${graft.util.ScratchIndex.corpusTag(d)}") {
+        val (visited, counts) = bfsWalk(sc, s, d)
+        // one log line per corpus build: the per-hop frontier sizes ARE
+        // the shuffle bound (each hop shuffles O(frontier × avg-degree)
+        // rows) — surfacing them makes the claim checkable in any run log
+        System.err.println(
+          s"[graph] bfs frontier sizes by hop (corpus $d): " +
+            counts.mkString(", "))
+        visited
+      }
+    }.orderBy("v")
 
   /** The BFS join-iteration itself: returns the converged (v, dist)
-    * relation, the per-hop frontier sizes (hop 0 = seeds), and the
-    * persisted frames the caller must release. Each frontier is
-    * counted once — a cheap action on a frame the next join needs
-    * materialized anyway — which both publishes the frontier-bound
-    * measurement and lets the loop SHORT-CIRCUIT when the frontier
-    * empties (diameter < cap), instead of planning empty join rounds.
+    * relation and the per-hop frontier sizes (hop 0 = seeds); its
+    * caches are pinned in `sc`. Each frontier is counted once — a
+    * cheap action on a frame the next join needs materialized
+    * anyway — which both publishes the frontier-bound measurement and
+    * lets the loop SHORT-CIRCUIT when the frontier empties
+    * (diameter < cap), instead of planning empty join rounds.
     */
-  private[graft] def bfsWalk(s: SparkSession, d: String)
-      : (DataFrame, Seq[Long], List[DataFrame]) = {
-    var toRelease: List[DataFrame] = Nil
-    val e0 = coOrderEdges(s, d)
+  private[graft] def bfsWalk(sc: LoopScope, s: SparkSession, d: String)
+      : (DataFrame, Seq[Long]) = {
     // undirected walk over canonical (p1 < p2) edges
-    val e = e0.select(col("p1").as("a"), col("p2").as("b"))
-      .unionAll(e0.select(col("p2").as("a"), col("p1").as("b")))
-    var frontier = e.select(col("a").as("v")).distinct()
-      .filter(col("v") <= 5).persist()
-    toRelease ::= frontier
+    val e = symmetric(coOrderEdges(s, d), "a", "b")
+    var frontier = sc.pin(e.select(col("a").as("v")).distinct()
+      .filter(col("v") <= 5))
     val counts = scala.collection.mutable.ArrayBuffer(frontier.count())
     var visited = frontier.withColumn("dist", lit(0L))
     var h = 1
     while (h <= MaxHops && counts.last > 0L) {
-      val fside = frontier
-      val next = fside.join(e, fside("v") === e("a"))
+      // the new frontier is lineage-truncated before it feeds BOTH the
+      // next hop's join and the growing visited union: without that,
+      // hop h's plan embeds hop h-1's full join tree on the frontier
+      // side AND every prior hop's tree through the visited union —
+      // the r17 BFS round-plan dump was ~35k lines by the last hop,
+      // all planning cost, none of it computation (the data is cached)
+      frontier = sc.next("bfs", frontier.join(e, frontier("v") === e("a"))
         .select(col("b").as("v")).distinct()
-        .join(visited.select(col("v")), Seq("v"), "left_anti")
-        .persist()
-      toRelease ::= next
-      recordRoundPlan("bfs", next)
-      counts += next.count()
-      // truncate the new frontier's lineage before it feeds BOTH the
-      // next hop's join and the growing visited union (the pagerank/
-      // label_prop discipline): without this, hop h's plan embeds
-      // hop h-1's full join tree on the frontier side AND every prior
-      // hop's tree through the visited union — the committed r17 BFS
-      // round-plan dump was ~35k lines by the last hop, all planning
-      // cost, none of it computation (the data is cached).
-      val nextT = org.apache.spark.sql.GraftColumnBridge
-        .truncateLineage(next)
+        .join(visited.select(col("v")), Seq("v"), "left_anti"))
+      counts += frontier.count()
       if (counts.last > 0L) {
         visited = visited
-          .unionByName(nextT.withColumn("dist", lit(h.toLong)))
+          .unionByName(frontier.withColumn("dist", lit(h.toLong)))
       }
-      frontier = nextT
       h += 1
     }
-    (visited, counts.toSeq, toRelease)
+    (visited, counts.toSeq)
   }
 
   /** Recursive-CTE replay: UNION (not UNION ALL) semantics dedup the
@@ -255,12 +241,11 @@ object Graph {
     * number of shuffles. The degree is joined onto the edge list ONCE
     * before the loop (it never changes), so the loop body re-joins
     * only the one relation that does. Per-iteration ranks are
-    * persisted and lineage-truncated ([[org.apache.spark.sql.
-    * GraftColumnBridge.truncateLineage]] — the dedupClusters
-    * discipline: a loop that re-joins its own iterate grows the
-    * logical plan every round even when the data is cached), and the
-    * converged table is memoized per corpus via ScratchIndex like the
-    * BFS distance table.
+    * persisted and lineage-truncated ([[graft.util.LoopScope.next]]
+    * — the dedupClusters discipline: a loop that re-joins its own
+    * iterate grows the logical plan every round even when the data is
+    * cached), and the converged table is memoized per corpus via
+    * ScratchIndex like the BFS distance table.
     *
     * Float discipline (taxonomy case 3, Relational.scala header):
     * ranks are genuinely continuous — accumulation order differs
@@ -273,44 +258,33 @@ object Graph {
     * mass term and the contribution aggregation reaches every vertex.
     * Order key is the vertex id (unique, exact), never the float.
     */
-  def pagerank(s: SparkSession, d: String): DataFrame = {
-    var toRelease: List[DataFrame] = Nil
-    val ranked = graft.util.ScratchIndex.materialize(
-        s, s"pagerank_v1_${graft.util.ScratchIndex.corpusTag(d)}") {
-      val e0 = coOrderEdges(s, d)
-      val e = e0.select(col("p1").as("src"), col("p2").as("dst"))
-        .unionAll(e0.select(col("p2").as("src"), col("p1").as("dst")))
-      val deg = e.groupBy(col("src")).agg(count(lit(1)).as("degree"))
-      // (src, dst, degree-of-src): the loop-invariant relation,
-      // built once, persisted, re-joined every iteration
-      val ce = e.join(deg, "src").persist()
-      toRelease ::= ce
-      // n is ONE scalar to the driver (bounded, like the k-means
-      // cell means) — it parameterizes the teleport literal both
-      // engines compute as the same IEEE division
-      val n = deg.count()
-      var ranks = deg
-        .select(col("src").as("v"), lit(1.0 / n).as("rank"))
-      for (_ <- 1 to PrIters) {
-        val rside = ranks
-        val next = ce.join(rside, ce("src") === rside("v"))
-          .groupBy(col("dst"))
-          .agg((lit(0.15 / n) + lit(Damping) *
-            sum(col("rank") / col("degree"))).as("rank"))
-          .select(col("dst").as("v"), col("rank"))
-          .persist()
-        toRelease ::= next
-        recordRoundPlan("pagerank", next)
-        ranks = org.apache.spark.sql.GraftColumnBridge
-          .truncateLineage(next)
+  def pagerank(s: SparkSession, d: String): DataFrame =
+    LoopScope.scoped { sc =>
+      graft.util.ScratchIndex.materialize(
+          s, s"pagerank_v1_${graft.util.ScratchIndex.corpusTag(d)}") {
+        val e = symmetric(coOrderEdges(s, d), "src", "dst")
+        val deg = e.groupBy(col("src")).agg(count(lit(1)).as("degree"))
+        // (src, dst, degree-of-src): the loop-invariant relation,
+        // built once, persisted, re-joined every iteration
+        val ce = sc.pin(e.join(deg, "src"))
+        // n is ONE scalar to the driver (bounded, like the k-means
+        // cell means) — it parameterizes the teleport literal both
+        // engines compute as the same IEEE division
+        val n = deg.count()
+        var ranks = deg
+          .select(col("src").as("v"), lit(1.0 / n).as("rank"))
+        for (_ <- 1 to PrIters) {
+          ranks = sc.next("pagerank", ce.join(ranks, ce("src") === ranks("v"))
+            .groupBy(col("dst"))
+            .agg((lit(0.15 / n) + lit(Damping) *
+              sum(col("rank") / col("degree"))).as("rank"))
+            .select(col("dst").as("v"), col("rank")))
+        }
+        ranks.join(deg.select(col("src").as("v"), col("degree")), "v")
+          .select(col("v"), col("degree"),
+            round(col("rank") * lit(n.toDouble), 9).as("rank_norm"))
       }
-      ranks.join(deg.select(col("src").as("v"), col("degree")), "v")
-        .select(col("v"), col("degree"),
-          round(col("rank") * lit(n.toDouble), 9).as("rank_norm"))
-    }
-    toRelease.foreach(_.unpersist())
-    ranked.orderBy("v")
-  }
+    }.orderBy("v")
 
   /** Unrolled 5-iteration replay (DuckDB disallows aggregation in a
     * recursive term, and unrolling keeps the iteration count
@@ -406,9 +380,7 @@ object Graph {
     // back columnar (unboxed arrays) by both joins instead.
     val adjKey = s"adj_und_v1_${graft.util.ScratchIndex.corpusTag(d)}"
     val adj = graft.util.ScratchIndex.materialize(s, adjKey) {
-      val und = e0.select(col("p1").as("a"), col("p2").as("b"))
-        .unionAll(e0.select(col("p2").as("a"), col("p1").as("b")))
-      und.groupBy(col("a").as("v"))
+      symmetric(e0, "a", "b").groupBy(col("a").as("v"))
         .agg(sort_array(collect_list(col("b"))).as("nbrs"))
     }
     // Join strategy is SIZE-GATED on the adjacency artifact's actual
@@ -531,43 +503,29 @@ object Graph {
     * sizes are joined on at the end (one extra keyed agg) so the
     * oracle hash pins the partition structure, not just the labels.
     */
-  def labelProp(s: SparkSession, d: String): DataFrame = {
-    var toRelease: List[DataFrame] = Nil
-    val labeled = graft.util.ScratchIndex.materialize(
-        s, s"labelprop_v1_${graft.util.ScratchIndex.corpusTag(d)}") {
-      val e0 = coOrderEdges(s, d)
-      val e = e0.select(col("p1").as("src"), col("p2").as("dst"))
-        .unionAll(e0.select(col("p2").as("src"), col("p1").as("dst")))
-        .persist()
-      toRelease ::= e
-      // every vertex appears as src in the symmetric relation, so
-      // this distinct covers the full vertex set
-      var labels = e.select(col("src").as("v")).distinct()
-        .select(col("v"), col("v").as("lbl"))
-        .persist()
-      toRelease ::= labels
-      // materialize the persisted seed once (round 1 consumes it)
-      labels.count(): Unit
-      for (_ <- 1 to LpRounds) {
-        val lside = labels
-        val next = e.join(lside, e("src") === lside("v"))
-          .select(col("dst").as("v"), col("lbl"))
-          .unionAll(labels)
-          .groupBy(col("v")).agg(min(col("lbl")).as("lbl"))
-          .persist()
-        toRelease ::= next
-        recordRoundPlan("labelprop", next)
-        labels = org.apache.spark.sql.GraftColumnBridge
-          .truncateLineage(next)
+  def labelProp(s: SparkSession, d: String): DataFrame =
+    LoopScope.scoped { sc =>
+      graft.util.ScratchIndex.materialize(
+          s, s"labelprop_v1_${graft.util.ScratchIndex.corpusTag(d)}") {
+        val e = sc.pin(symmetric(coOrderEdges(s, d), "src", "dst"))
+        // every vertex appears as src in the symmetric relation, so
+        // this distinct covers the full vertex set
+        var labels = sc.pin(e.select(col("src").as("v")).distinct()
+          .select(col("v"), col("v").as("lbl")))
+        // materialize the persisted seed once (round 1 consumes it)
+        labels.count(): Unit
+        for (_ <- 1 to LpRounds) {
+          labels = sc.next("labelprop", e.join(labels, e("src") === labels("v"))
+            .select(col("dst").as("v"), col("lbl"))
+            .unionAll(labels)
+            .groupBy(col("v")).agg(min(col("lbl")).as("lbl")))
+        }
+        val sizes = labels.groupBy(col("lbl"))
+          .agg(count(lit(1)).as("n_members"))
+        labels.join(sizes, "lbl")
+          .select(col("v"), col("lbl").as("community"), col("n_members"))
       }
-      val sizes = labels.groupBy(col("lbl"))
-        .agg(count(lit(1)).as("n_members"))
-      labels.join(sizes, "lbl")
-        .select(col("v"), col("lbl").as("community"), col("n_members"))
-    }
-    toRelease.foreach(_.unpersist())
-    labeled.orderBy("v")
-  }
+    }.orderBy("v")
 
   /** The shared unrolled 4-round label-propagation CTE chain —
     * single-sourced so [[labelPropSql]] and [[modularitySql]] can
@@ -667,8 +625,7 @@ object Graph {
     val communities = assignment
       .select(col("community"), col("n_members")).distinct()
     val e0 = coOrderEdges(s, d)
-    val sym = e0.select(col("p1").as("src"), col("p2").as("dst"))
-      .unionAll(e0.select(col("p2").as("src"), col("p1").as("dst")))
+    val sym = symmetric(e0, "src", "dst")
     val m = e0.agg(count(lit(1)).as("m"))
     val lc = e0
       .join(labels.toDF("p1", "c1"), Seq("p1"))
@@ -811,42 +768,13 @@ object Graph {
     */
   private val BcastVertCap = 4000000L
 
-  // NOTE: r17 added a `bcastIfSmall` broadcast-hint gate on the
-  // iterative loops' per-round small relations (pagerank's ranks,
-  // BFS's frontier/visited, k-core's survivors, label-prop's labels).
-  // r18 removed it: first-round physical plans captured with the gate
-  // forced OFF (spark.graft.graph.bcastRowsCap=0) are byte-identical
-  // to the gated plans — the planner's own estimates already pick
-  // BroadcastHashJoin for every per-round join, first round included,
-  // so the hint changed no plan and only added the risk of forcing a
-  // multi-GB broadcast at a scale where the planner would know better.
-
-  /** Physical plan of the FIRST executed round of each iterative
-    * build, keyed by query family — evidence hook: the loop plans
-    * live inside memoized artifact builds and never appear in the
-    * registered query's explain, so the loops deposit their first
-    * round's planned physical tree here for plans/ capture and spec
-    * assertions (debug surface only; never read by query paths).
-    * The FIRST round is the one the broadcast gate actually changes:
-    * its small side sits under a fresh corpus-scan aggregate whose
-    * size ESTIMATE is corpus-order, so the un-gated planner picks a
-    * sort-merge join there even though the true size is |V|; later
-    * rounds read the previous round's cached/LogicalRDD output,
-    * whose accurate small stats let auto-broadcast kick in anyway.
+  /** Both orientations of canonical (p1, p2) edges as (`a`, `b`)
+    * rows: the undirected edge relation every walk, degree and
+    * adjacency build reads.
     */
-  private[graft] val roundPlans =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def recordRoundPlan(key: String, df: DataFrame): Unit =
-    // containsKey gate BEFORE stringifying: putIfAbsent evaluates its
-    // value argument eagerly, so the naive form rebuilt (and then
-    // discarded) a multi-thousand-line executedPlan string on EVERY
-    // loop round — evidence tooling taxing the measured path (guide
-    // §1: the instrument must not distort the measurement). With the
-    // gate, only the first round of each family pays one stringify.
-    if (!roundPlans.containsKey(key))
-      roundPlans.putIfAbsent(
-        key, df.queryExecution.executedPlan.toString): Unit
+  private def symmetric(e: DataFrame, a: String, b: String): DataFrame =
+    e.select(col("p1").as(a), col("p2").as(b))
+      .unionAll(e.select(col("p2").as(a), col("p1").as(b)))
 
   /** Co-purchase pairs over a lineitem subset — the [[coOrderEdgesPlan]]
     * shape, parameterized so the base/delta split shares one
@@ -1100,8 +1028,7 @@ object Graph {
     graft.util.ScratchIndex.materialize(
         s, s"adjbase_${tag}_${graft.util.ScratchIndex.corpusTag(d)}") {
       val e = baseGraphEdges(s, d, pred, tag)
-      e.select(col("p1").as("v"), col("p2").as("u"))
-        .unionAll(e.select(col("p2").as("v"), col("p1").as("u")))
+      symmetric(e, "v", "u")
         .groupBy(col("v"))
         .agg(sort_array(collect_list(col("u"))).as("nbrs"))
         .repartitionByRange(col("v"))
@@ -1273,8 +1200,7 @@ object Graph {
     // not the corpus (the fixture's dense 10% delta touches every
     // vertex, so for it the prune is a no-op and the pass is the
     // linear cost the const control isolates).
-    val symd = fresh.select(col("p1").as("v"), col("p2").as("u"))
-      .unionAll(fresh.select(col("p2").as("v"), col("p1").as("u")))
+    val symd = symmetric(fresh, "v", "u")
     val adjDU = symd.groupBy(col("v"))
       .agg(sort_array(collect_list(col("u"))).as("nbrs"))
     val deltaVerts = symd.select(col("v")).distinct()
@@ -1380,57 +1306,39 @@ object Graph {
     * rounds are no-ops on an empty subgraph); the converged layer
     * table is memoized per corpus via ScratchIndex.
     */
-  def kcorePeel(s: SparkSession, d: String): DataFrame = {
-    var toRelease: List[DataFrame] = Nil
-    val layered = graft.util.ScratchIndex.materialize(
-        s, s"kcore_v1_${graft.util.ScratchIndex.corpusTag(d)}") {
-      val e0 = coOrderEdges(s, d)
-      val sym = e0.select(col("p1").as("src"), col("p2").as("dst"))
-        .unionAll(e0.select(col("p2").as("src"), col("p1").as("dst")))
-        .persist()
-      toRelease ::= sym
-      val deg0 = sym.groupBy(col("src").as("v"))
-        .agg(count(lit(1)).as("degree"))
-        .persist()
-      toRelease ::= deg0
-      // two bounded scalars to the driver; Long division truncates
-      // positives exactly like the oracle's integer `//`
-      val k = sym.count() / deg0.count()
-      var edges = sym
-      // survivors of round r, tagged r; round 0 = the full vertex set
-      var tagged = deg0.select(col("v"), lit(0L).as("r"))
-      var r = 1
-      var alive = true
-      while (r <= KcRounds && alive) {
-        val surv = edges.groupBy(col("src").as("v"))
-          .agg(count(lit(1)).as("deg"))
-          .filter(col("deg") >= k).select(col("v"))
-          .persist()
-        toRelease ::= surv
-        val nSurv = surv.count()
-        alive = nSurv > 0L
-        if (alive) {
-          tagged = tagged.unionAll(surv.withColumn("r", lit(r.toLong)))
-          val s1 = surv
-          val s2 = surv
-          val next = edges
-            .join(s1, edges("src") === s1("v"), "left_semi")
-            .join(s2, edges("dst") === s2("v"), "left_semi")
-            .persist()
-          toRelease ::= next
-          recordRoundPlan("kcore", next)
-          edges = org.apache.spark.sql.GraftColumnBridge
-            .truncateLineage(next)
+  def kcorePeel(s: SparkSession, d: String): DataFrame =
+    LoopScope.scoped { sc =>
+      graft.util.ScratchIndex.materialize(
+          s, s"kcore_v1_${graft.util.ScratchIndex.corpusTag(d)}") {
+        val sym = sc.pin(symmetric(coOrderEdges(s, d), "src", "dst"))
+        val deg0 = sc.pin(sym.groupBy(col("src").as("v"))
+          .agg(count(lit(1)).as("degree")))
+        // two bounded scalars to the driver; Long division truncates
+        // positives exactly like the oracle's integer `//`
+        val k = sym.count() / deg0.count()
+        var edges = sym
+        // survivors of round r, tagged r; round 0 = the full vertex set
+        var tagged = deg0.select(col("v"), lit(0L).as("r"))
+        var r = 1
+        var alive = true
+        while (r <= KcRounds && alive) {
+          val surv = sc.pin(edges.groupBy(col("src").as("v"))
+            .agg(count(lit(1)).as("deg"))
+            .filter(col("deg") >= k).select(col("v")))
+          alive = surv.count() > 0L
+          if (alive) {
+            tagged = tagged.unionAll(surv.withColumn("r", lit(r.toLong)))
+            edges = sc.next("kcore", edges
+              .join(surv, edges("src") === surv("v"), "left_semi")
+              .join(surv, edges("dst") === surv("v"), "left_semi"))
+          }
+          r += 1
         }
-        r += 1
+        deg0.join(
+          tagged.groupBy(col("v")).agg(max(col("r")).as("layer")), "v")
+          .select(col("v"), col("degree"), col("layer"))
       }
-      deg0.join(
-        tagged.groupBy(col("v")).agg(max(col("r")).as("layer")), "v")
-        .select(col("v"), col("degree"), col("layer"))
-    }
-    toRelease.foreach(_.unpersist())
-    layered.orderBy("v")
-  }
+    }.orderBy("v")
 
   /** Unrolled 4-round replay; layer via nested-core membership
     * (s4 ⊆ s3 ⊆ s2 ⊆ s1, so the first non-null from the deepest side

@@ -743,8 +743,12 @@ object Profile {
         }
         for (round <- 1 to 3) {
           time(s"incremental update (const delta) round $round") {
+            // drop the memoized output so every round re-runs the
+            // daily job; the round's time includes publishing it
+            graft.util.ScratchIndex.dropKey(
+              s"dedupclustinc_const_${graft.util.ScratchIndex.corpusTag(sfDir)}")
             graft.ops.Dedup.dedupClustersIncrementalWith(spark, sfDir,
-              predD, "const", bcastDelta = true, memoOut = false).count()
+              predD, "const", bcastDelta = true).count()
           }
         }
 
@@ -889,15 +893,12 @@ object Profile {
         // loops live inside memoized artifact builds, so run each
         // build fresh (pid-scoped scratch => always first-touch in
         // this JVM) and print the FIRST-round physical plan each
-        // loop deposited in Graph.roundPlans. (The optional
-        // bcastRowsCap 3rd arg died with the bcastIfSmall gate in
-        // r18: plans captured with cap=0 vs default were identical,
-        // which is why the gate was deleted.)
+        // loop deposited in LoopScope.roundPlans.
         for (q <- Seq("graph_pagerank", "graph_bfs_hops",
             "graph_label_prop", "graph_kcore")) {
           graft.SparkEntry.queries(q)(spark, sfDir).count(): Unit
         }
-        graft.ops.Graph.roundPlans.forEach { (k, v) =>
+        graft.util.LoopScope.roundPlans.forEach { (k, v) =>
           println(s"========== round plan: $k ==========")
           println(v)
         }

@@ -185,23 +185,13 @@ object ScratchIndex {
     if (tmpfsBacked) w.option("compression", "uncompressed") else w
   }
 
+  /** The artifact under `key`, built on first touch as a plain
+    * parquet dump of `build` and read back.
+    */
   def materialize(s: SparkSession, key: String)(build: => DataFrame)
-      : DataFrame = {
-    warnIfLowHeadroom()
-    val dst = new File(root, key)
-    if (!dst.exists()) {
-      val tmp = new File(root,
-        s"$key.build_${java.util.UUID.randomUUID().toString.take(8)}")
-      scratchWriter(build).parquet(tmp.toString)
-      try Files.move(tmp.toPath, dst.toPath,
-        StandardCopyOption.ATOMIC_MOVE): Unit
-      catch {
-        case _: java.nio.file.FileSystemException =>
-          deleteRecursively(tmp) // another builder won the rename
-      }
-    }
-    s.read.parquet(dst.toString)
-  }
+      : DataFrame =
+    s.read.parquet(
+      materializePath(s, key)(p => scratchWriter(build).parquet(p)))
 
   /** Like `materialize`, but the builder controls the write (e.g. a
     * hive-partitioned `partitionBy` layout a plain parquet dump can't
@@ -210,6 +200,7 @@ object ScratchIndex {
     */
   def materializePath(s: SparkSession, key: String)(write: String => Unit)
       : String = {
+    warnIfLowHeadroom()
     val dst = new File(root, key)
     if (!dst.exists()) {
       val tmp = new File(root,

@@ -43,7 +43,8 @@ object GraftColumnBridge {
     * OOMs the driver (observed at k≈12 in DeepComponentSpec before
     * this existed). `fromDataset` preserves the physical partitioning
     * and ordering of the wrapped plan, so downstream joins on the
-    * same key avoid a re-shuffle.
+    * same key avoid a re-shuffle. Loops reach it through
+    * `graft.util.LoopScope.next`, which also owns the persist.
     */
   def truncateLineage(df: DataFrame): DataFrame = {
     val ds = df.asInstanceOf[classic.Dataset[Row]]

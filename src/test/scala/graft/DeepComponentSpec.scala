@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.Dedup
+import graft.util.LoopScope
 
 /** Deep/adversarial component shapes for the connected-components
   * contraction (VERDICT r10 #6). The near-dup corpora the engine
@@ -52,8 +53,8 @@ class DeepComponentSpec extends SparkTestBase {
   }
 
   private def run(n: Int, pairs: Seq[(Long, Long)], tag: String)
-      : Dedup.Contraction = {
-    val c = Dedup.contractComponents(edges(pairs))
+      : Dedup.Contraction = LoopScope.scoped { sc =>
+    val c = Dedup.contractComponents(sc, edges(pairs))
     val got = c.labels.as[(Long, Long)].collect().toMap
     val want = componentMins(n, pairs)
     // every edge-touching node labeled with its component minimum
@@ -61,7 +62,6 @@ class DeepComponentSpec extends SparkTestBase {
     assert(got.keySet === touched, s"$tag: node set")
     touched.foreach(v => assert(got(v) === want(v), s"$tag: node $v"))
     info(s"$tag: n=$n levels=${c.levels} maxHops=${c.maxHops}")
-    c.acquired.foreach(_.unpersist())
     c
   }
 
@@ -112,11 +112,11 @@ class DeepComponentSpec extends SparkTestBase {
     val deltaPairs = Seq((9L, 10L), (100L, 101L), (20L, 102L), (103L, 15L))
     val docs = ((0L to 21L) ++ Seq(100L, 101L, 102L, 103L))
       .toDF("doc_id")
-    val (labeled, acquired) = Dedup.mergeIncrementalLabels(
-      baseLabels, deltaPairs.toDF("a_id", "b_id"), docs)
-    val got = labeled.as[(Long, Long, Long)].collect()
-      .map(r => r._1 -> (r._2, r._3)).toMap
-    acquired.foreach(_.unpersist())
+    val got = LoopScope.scoped { sc =>
+      Dedup.mergeIncrementalLabels(sc,
+        baseLabels, deltaPairs.toDF("a_id", "b_id"), docs)
+        .as[(Long, Long, Long)].collect()
+    }.map(r => r._1 -> (r._2, r._3)).toMap
     // ground truth: union-find over base ∪ delta on the doc universe
     val ids = docs.as[Long].collect()
     val idx = ids.zipWithIndex.toMap

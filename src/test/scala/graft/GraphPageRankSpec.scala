@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ops.Graph
+import graft.util.LoopScope
 
 /** PageRank (bounded power iteration) and the BFS frontier-bound
   * measurement: the two propagation primitives are cross-checked
@@ -83,9 +84,10 @@ class GraphPageRankSpec extends SparkTestBase {
       h += 1
     }
     val want = levels.map(_.size.toLong).toSeq
-    val (visited, counts, acquired) = Graph.bfsWalk(spark, sf)
-    val visN = visited.count()
-    acquired.foreach(_.unpersist())
+    val (visN, counts) = LoopScope.scoped { sc =>
+      val (visited, counts) = Graph.bfsWalk(sc, spark, sf)
+      (visited.count(), counts)
+    }
     // engine counts match level sizes exactly; a short-circuited walk
     // reports at most one trailing zero (the convergence probe)
     assert(counts.takeWhile(_ > 0L) === want.takeWhile(_ > 0L))

@@ -1,14 +1,17 @@
 package graft
 
-import org.apache.spark.sql.GraftColumnBridge
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+import graft.util.LoopScope
 
 /** Pins the three claims GraftColumnBridge.truncateLineage makes:
   * data unchanged, logical plan collapsed to a leaf (the iterative-
   * loop OOM class from DeepComponentSpec cannot re-grow), and the
   * wrapped plan's hash partitioning preserved so a same-key
-  * aggregation downstream plans NO new exchange.
+  * aggregation downstream plans NO new exchange. Also pins the
+  * release contract of LoopScope, the loops' only route to it.
   */
 class LineageTruncationSpec extends SparkTestBase {
 
@@ -63,5 +66,56 @@ class LineageTruncationSpec extends SparkTestBase {
       s"expected no exchange over the preserved partitioning, got: " +
         exchanges.mkString(", "))
     finally { parted.unpersist(): Unit }
+  }
+
+  /** One pin and one round step, with the frames whose caches they
+    * hold; the step's output is materialized through its wrapper.
+    */
+  private def pinAndStep(sc: LoopScope): Seq[DataFrame] = {
+    val seed = sc.pin(spark.range(0, 100).toDF("id"))
+    val round = seed.select((col("id") * 2).as("id"))
+    assert(sc.next("loopscope_spec", round).count() === 100L)
+    Seq(seed, round)
+  }
+
+  test("LoopScope unpins every frame when the body returns") {
+    val held = LoopScope.scoped { sc =>
+      val h = pinAndStep(sc)
+      h.foreach(df => assert(df.storageLevel !== StorageLevel.NONE))
+      h
+    }
+    held.foreach(df => assert(df.storageLevel === StorageLevel.NONE))
+  }
+
+  test("LoopScope unpins every frame when the body throws") {
+    var held = Seq.empty[DataFrame]
+    intercept[IllegalStateException] {
+      LoopScope.scoped { sc =>
+        held = pinAndStep(sc)
+        throw new IllegalStateException("build failed mid-loop")
+      }
+    }
+    assert(held.nonEmpty)
+    held.foreach(df => assert(df.storageLevel === StorageLevel.NONE))
+  }
+
+  test("Graph.bfsWalk in a scope leaves the cache manager as it found it") {
+    val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    val wasEmpty = cm.isEmpty
+    // every frame the walk pins is materialized by its counts, so the
+    // persisted RDDs stand for its cache entries
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
+    val visited = LoopScope.scoped { sc =>
+      val (v, _) = graft.ops.Graph.bfsWalk(sc, spark, sf)
+      val n = v.count()
+      assert(!cm.isEmpty)
+      assert(persisted.size > before.size)
+      n
+    }
+    assert(visited > 0L)
+    assert(cm.isEmpty === wasEmpty)
+    assert(persisted === before)
   }
 }

@@ -429,4 +429,19 @@ class SkewSketchSpec extends SparkTestBase {
         assert(med >= lo && med <= hi)
       }
   }
+
+  test("bottom-k buffer: a zero cap is rejected, not an index error") {
+    intercept[IllegalArgumentException] {
+      new graft.functions.BottomK.LongBottomSet(0).add(1L)
+    }
+  }
+
+  test("bottom-k buffer keeps the k smallest distinct values") {
+    val vs = Seq(9L, 3L, 7L, 3L, -2L, 9L, 0L, 7L, 5L, -2L, 11L)
+    for (k <- 1 to 8) {
+      val b = new graft.functions.BottomK.LongBottomSet(k)
+      vs.foreach(b.add)
+      assert(b.result.toSeq === vs.distinct.sorted.take(k), s"k=$k")
+    }
+  }
 }
