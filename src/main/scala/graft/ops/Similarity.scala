@@ -226,6 +226,14 @@ object Similarity {
     emb.orderBy(xxhash64(col("vec_id")).asc, col("vec_id").asc)
       .limit(TrainSampleN)
 
+  /** Driver-side Lloyd argmax step: the `(-sim, idx)` key
+    * [[graft.functions.NearestCentroids]] sorts by, which ranks an
+    * underflowed +0.0 above -0.0 (strict `>` would not) and a NaN
+    * cosine (zero-norm vector or centroid) last.
+    */
+  private[graft] def beats(sim: Double, bestSim: Double): Boolean =
+    java.lang.Double.compare(-sim, -bestSim) < 0
+
   /** Lloyd training over an arbitrary (vec_id, v) relation — shared by
     * the full-corpus quantizer above and the base-only (frozen)
     * quantizer of the incremental path. Trains on the bounded
@@ -265,7 +273,7 @@ object Similarity {
         var c = 0
         while (c < cents.length) {
           val sim = cos(v, cents(c))
-          if (sim > bestSim) { best = c; bestSim = sim }
+          if (beats(sim, bestSim)) { best = c; bestSim = sim }
           c += 1
         }
         cnt(best) += 1
@@ -424,7 +432,7 @@ object Similarity {
     * the writer).
     */
   private def readLayer(s: SparkSession, path: String): DataFrame =
-    s.read.parquet(path)
+    graft.util.Tables.parquet(s, path)
       .select(col("vec_id"), col("v"), col("cell").as("cent_id"))
 
   private[graft] def baseIvfPostings(s: SparkSession, d: String): DataFrame =
@@ -623,14 +631,13 @@ object Similarity {
       rows.foreach { v =>
         var m = 0
         while (m < PqM) {
-          // argmax by cosine, lowest index on ties (strict >): the
-          // NearestCentroids sort order; all-NaN degenerates to 0,
-          // also like the sort
+          // argmax by cosine in the NearestCentroids sort order
+          // (`beats`); all-NaN degenerates to 0, also like the sort
           var best = 0; var bestSim = Double.NegativeInfinity
           var k = 0
           while (k < PqK) {
             val sim = cos(v, m * PqSub, cb(m)(k))
-            if (sim > bestSim) { best = k; bestSim = sim }
+            if (beats(sim, bestSim)) { best = k; bestSim = sim }
             k += 1
           }
           cnt(m)(best) += 1

@@ -300,8 +300,8 @@ object Sources {
     */
   private[graft] def dppPlan(s: SparkSession, fact: String,
       dim: String): DataFrame =
-    s.read.parquet(fact)
-      .join(s.read.parquet(dim).filter(col("era") === "recent"),
+    graft.util.Tables.parquet(s, fact)
+      .join(graft.util.Tables.parquet(s, dim).filter(col("era") === "recent"),
         Seq("ship_year"))
       .groupBy(col("ship_year"), col("era"))
       .agg(count(lit(1)).as("n_lines"),
@@ -436,8 +436,8 @@ object Sources {
     }
     val lo = lit("1997-01-01").cast("timestamp")
     val hi = lit("1997-12-31 23:59:59").cast("timestamp")
-    val manifest = s.read.parquet(out)
-      .groupBy(input_file_name().as("file"))
+    val art = graft.util.Tables.parquet(s, out)
+    val manifest = art.groupBy(input_file_name().as("file"))
       .agg(min(col("o_orderdate")).as("f_lo"), max(col("o_orderdate")).as("f_hi"))
     // pruning filter executes distributed; only survivors cross to
     // the driver, and never more than the planning cap (+1 detects
@@ -452,10 +452,10 @@ object Sources {
       if (survivors.length > MaxPlannedFiles) {
         // skipping would keep ~everything: full scan, same answer
         statsSkipFileCounts.put(d, (total, total))
-        s.read.parquet(out)
+        art
       } else {
         statsSkipFileCounts.put(d, (survivors.length, total))
-        s.read.parquet(survivors.sorted.toIndexedSeq: _*)
+        s.read.schema(art.schema).parquet(survivors.sorted.toIndexedSeq: _*)
       }
     scan
       .filter(col("o_orderdate") >= lo && col("o_orderdate") <= hi)

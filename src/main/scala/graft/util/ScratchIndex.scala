@@ -186,11 +186,12 @@ object ScratchIndex {
   }
 
   /** The artifact under `key`, built on first touch as a plain
-    * parquet dump of `build` and read back.
+    * parquet dump of `build` and read back (schema inferred once per
+    * JVM, see `Tables.parquet`).
     */
   def materialize(s: SparkSession, key: String)(build: => DataFrame)
       : DataFrame =
-    s.read.parquet(
+    Tables.parquet(s,
       materializePath(s, key)(p => scratchWriter(build).parquet(p)))
 
   /** Like `materialize`, but the builder controls the write (e.g. a

@@ -16,7 +16,41 @@ object Tables {
     * `.explain("formatted")` — PushedFilters/ReadSchema).
     */
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  // the confs parquet schema conversion reads: one footer, many schemas
+  private val schemaConfs = Seq("spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString", "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled")
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[
+    (String, Seq[String]), ((Long, Long), StructType)]()
+
+  /** `s.read.parquet(path)`, inferring the path's schema once per JVM:
+    * a plain read re-reads a footer through a one-task Spark job every
+    * time, a hit supplies the remembered schema and starts no job. A
+    * miss is the plain read itself, so the path is still listed once.
+    * The cache relies on its callers' paths never being rewritten:
+    * testdata is never written, and memoized artifacts appear only by
+    * atomic rename (`ScratchIndex.materializePath`). Each entry is
+    * still stamped with the path's mtime and length, and a changed
+    * stamp replaces it. Reads whose inference is the point (the
+    * `sources` roundtrip and schema-evolution checks of their own
+    * output) or whose path is rewritten per call stay `s.read.parquet`.
+    */
+  def parquet(s: SparkSession, path: String): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val st = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .getFileStatus(p)
+    val stamp = (st.getModificationTime, st.getLen)
+    val key = (path, schemaConfs.map(s.conf.get))
+    schemas.get(key) match {
+      case (`stamp`, schema) => s.read.schema(schema).parquet(path)
+      case _ =>
+        val df = s.read.parquet(path)
+        schemas.put(key, (stamp, df.schema))
+        df
+    }
+  }
 
   /** Streaming file source for `$dir/$name.parquet`, accepting BOTH
     * layouts a lake presents: a plain single file (the driver

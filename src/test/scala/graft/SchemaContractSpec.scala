@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.types._
 
 /** Driver-testdata schema TRIPWIRE. The generator behind
@@ -167,5 +171,94 @@ class SchemaContractSpec extends SparkTestBase {
       .write.mode("overwrite").parquet(s"$ok/events.parquet")
     val r = graft.util.Tables.events(spark, ok).select("ts_us").head()
     assert(r.getLong(0) === 1704067200000000L)
+  }
+
+  /** `body`'s result and the Spark jobs it starts on this thread: its
+    * jobs carry a fresh job group, and a marker job started after it
+    * proves the listener has seen all of them (the bus delivers in
+    * order).
+    */
+  private def jobsStartedBy[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"counted-${java.util.UUID.randomUUID()}"
+    val jobs = new AtomicInteger
+    val marker = new CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet(): Unit
+          case Some(g) if g == s"$group-end" => marker.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "counted")
+      val result = body
+      sc.setJobGroup(s"$group-end", "marker")
+      spark.range(1).count()
+      assert(marker.await(60, TimeUnit.SECONDS), "marker job never reported")
+      (result, jobs.get)
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
+  }
+
+  test("a repeated table or artifact read infers no schema (no Spark job)") {
+    val path = s"$sf/orders.parquet"
+    assert(jobsStartedBy(spark.read.parquet(path))._2 > 0,
+      "a plain read should start its schema-inference job")
+    graft.util.Tables.orders(spark, sf)
+    val (again, jobs) = jobsStartedBy(graft.util.Tables.orders(spark, sf))
+    assert(jobs === 0)
+    assert(again.schema === spark.read.parquet(path).schema)
+
+    val key = s"schemacache_${java.util.UUID.randomUUID().toString.take(8)}"
+    def art = graft.util.ScratchIndex.materialize(spark, key) {
+      spark.range(5).selectExpr("id", "CAST(id AS STRING) AS s")
+    }
+    art
+    val (artAgain, artJobs) = jobsStartedBy(art)
+    assert(artJobs === 0)
+    val built = graft.util.ScratchIndex.materializePath(spark, key)(_ =>
+      sys.error("already built"))
+    assert(artAgain.schema === spark.read.parquet(built).schema)
+    assert(artAgain.count() === 5L)
+  }
+
+  test("a file moved into place over a cached path is read with its schema") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("schemaswap").toString
+    def partFile(df: org.apache.spark.sql.DataFrame, name: String) = {
+      df.coalesce(1).write.parquet(s"$dir/$name")
+      new java.io.File(s"$dir/$name").listFiles()
+        .find(_.getName.endsWith(".parquet")).get.toPath
+    }
+    val table = Paths.get(s"$dir/t.parquet")
+    Files.move(partFile(Seq((1L, "a")).toDF("id", "name"), "v1"), table)
+    val before = graft.util.Tables.t(spark, dir, "t").schema
+    assert(graft.util.Tables.t(spark, dir, "t").schema === before)
+    Files.move(partFile(Seq((7, 2.5, true)).toDF("k", "score", "ok"), "v2"),
+      table, StandardCopyOption.REPLACE_EXISTING,
+      StandardCopyOption.ATOMIC_MOVE)
+    val after = graft.util.Tables.t(spark, dir, "t")
+    assert(after.schema === spark.read.parquet(table.toString).schema)
+    assert(after.schema.fieldNames.toSeq === Seq("k", "score", "ok"))
+    assert(after.as[(Int, Double, Boolean)].collect().toSeq === Seq((7, 2.5, true)))
+  }
+
+  test("a hive-partitioned artifact keeps its partition column and type") {
+    import org.apache.spark.sql.functions.col
+    val key = s"schemacache_part_${java.util.UUID.randomUUID().toString.take(8)}"
+    val path = graft.util.ScratchIndex.materializePath(spark, key) { tmp =>
+      spark.range(6).select(col("id"), (col("id") % 3).cast("int").as("p"))
+        .write.partitionBy("p").parquet(tmp)
+    }
+    val first = graft.util.Tables.parquet(spark, path)
+    val (second, jobs) = jobsStartedBy(graft.util.Tables.parquet(spark, path))
+    assert(jobs === 0)
+    assert(first.schema === spark.read.parquet(path).schema)
+    assert(second.schema === first.schema)
+    assert(second.schema("p").dataType === IntegerType)
+    assert(second.filter(col("p") === 2).select("id").collect()
+      .map(_.getLong(0)).sorted.toSeq === Seq(2L, 5L))
   }
 }

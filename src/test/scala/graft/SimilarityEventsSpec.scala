@@ -388,4 +388,31 @@ class SimilarityEventsSpec extends SparkTestBase {
     assert(ivf >= 0.95, s"IVF recall@3 on clustered data $ivf")
     assert(graph >= 0.95, s"graph recall@3 on clustered data $graph")
   }
+
+  test("Lloyd argmax picks the centroid NearestCentroids ranks first") {
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import graft.functions.{CosineSim, NearestCentroids}
+    def arr(xs: Seq[Double]) = new GenericArrayData(xs.map(x => x: Any).toArray)
+    def lloyd(v: Seq[Double], m: Seq[Seq[Double]]): Int = {
+      var best = 0; var bestSim = Double.NegativeInfinity
+      m.indices.foreach { c =>
+        val sim = CosineSim.compute(arr(v), arr(m(c)))
+        if (Similarity.beats(sim, bestSim)) { best = c; bestSim = sim }
+      }
+      best
+    }
+    def sorted(v: Seq[Double], m: Seq[Seq[Double]]): Int =
+      NearestCentroids.compute(arr(v),
+        new GenericArrayData(m.map(c => arr(c): Any).toArray), 1).getInt(0)
+    // cosines underflow to -0.0 then +0.0: the sort ranks +0.0 first,
+    // where a strict IEEE > would keep index 0
+    val signedZero = (Seq(1e150, 1e-150, 0.0),
+      Seq(Seq(0.0, -1e-150, 1e150), Seq(0.0, 1e-150, 1e150)))
+    assert(sorted(signedZero._1, signedZero._2) === 1)
+    val zeroVector = (Seq(0.0, 0.0, 0.0), Seq(Seq(1.0, 0.0, 0.0), Seq(0.0, 1.0, 0.0)))
+    // a NaN cosine ranks last, below any real one
+    val zeroCentroid = (Seq(1.0, 2.0, 0.0), Seq(Seq(0.0, 0.0, 0.0), Seq(-1.0, 0.0, 0.0)))
+    for ((v, m) <- Seq(signedZero, zeroVector, zeroCentroid))
+      assert(lloyd(v, m) === sorted(v, m), s"v=$v m=$m")
+  }
 }

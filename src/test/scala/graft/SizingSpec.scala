@@ -49,4 +49,13 @@ class SizingSpec extends SparkTestBase {
       Sizing.writeUnits(spark, sf, "no_such_table")
     }
   }
+
+  test("Bench flags a shifted window on io (3×) or CPU (1.2×) divergence") {
+    // r13: io fell from 427 to 36.7 MB/s mid-run
+    assert(Bench.diverged(427.0, 36.7, 3.0))
+    // r18: cpu_par_x fell from 27.2 to 21.0 unflagged; either order trips
+    assert(Bench.diverged(27.2, 21.0, 1.2) && Bench.diverged(21.0, 27.2, 1.2))
+    // the healthy cpu_par_x band on that host
+    assert(!Bench.diverged(24.0, 27.0, 1.2))
+  }
 }
