@@ -6,11 +6,12 @@ import org.apache.spark.sql.SparkSession
   * SPARK_GRAFT_SF_DIR and prints the contract JSON.
   *
   * Two lines are printed: a verbose line first (full-precision cold +
-  * warm per-query seconds, for humans reading the log), then the
-  * driver-contract line LAST — compact (2-decimal values, no per-query
-  * warm map) so it fits entirely inside the driver's 2000-char stdout
-  * tail buffer even as the query count grows (round-1's single verbose
-  * line overflowed that buffer and the driver recorded `parsed: null`).
+  * warm per-query seconds and process CPU-seconds, for humans reading
+  * the log), then the driver-contract line LAST — compact (2-decimal
+  * values, no per-query warm map) so it fits entirely inside the
+  * driver's 2000-char stdout tail buffer even as the query count grows
+  * (round-1's single verbose line overflowed that buffer and the driver
+  * recorded `parsed: null`).
   *
   * `value`/`queries` are COLD first-run times (includes Catalyst
   * planning + whole-stage-codegen compilation — the driver-comparable
@@ -149,14 +150,11 @@ object Bench {
       import org.apache.spark.sql.functions._
       val key = "spark.sql.streaming.stateStore.providerClass"
       val prev = spark.conf.getOption(key)
-      // mirror the sweep's own state sizing (runToCompletion clamps
-      // stream shuffle partitions to 4): per-batch cost is state-store
+      provider.foreach(spark.conf.set(key, _))
+      // the sweep's own state sizing: per-batch cost is state-store
       // commits x partitions, and the warm-up only needs to touch the
       // machinery once per provider
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
-      provider.foreach(spark.conf.set(key, _))
-      try {
+      try graft.streaming.EventStream.withStreamPartitions(spark) {
         val q = spark.readStream.schema("ts TIMESTAMP")
           .parquet(warmSrc.toString)
           .withWatermark("ts", "0 seconds")
@@ -169,13 +167,10 @@ object Bench {
           .format("memory").queryName(s"warmup_${provider.isDefined}")
           .start()
         try q.processAllAvailable() finally q.stop()
-      } finally {
-        spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-        provider.foreach(_ => prev match {
-          case Some(v) => spark.conf.set(key, v)
-          case None    => spark.conf.unset(key)
-        })
-      }
+      } finally provider.foreach(_ => prev match {
+        case Some(v) => spark.conf.set(key, v)
+        case None    => spark.conf.unset(key)
+      })
     }
     warmStream(None)
     warmStream(Some("org.apache.spark.sql.execution.streaming" +
@@ -393,6 +388,9 @@ object Bench {
       m.toSeq.sortBy(_._1)
         .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
         .mkString("{", ",", "}")
+    // process CPU-seconds per query, from the unadjudicated first runs
+    def cpuSecs(m: Map[String, (Double, Double)]): Map[String, Double] =
+      m.map { case (n, (_, cpu)) => n -> cpu }
     def jlist(xs: List[String]): String =
       xs.map("\"" + _ + "\"").mkString("[", ",", "]")
     // explicit ROOT locale: f"$v%.2f" uses the JVM default locale and
@@ -430,6 +428,8 @@ object Bench {
     println(s"""{"metric":"total","value":$total,"unit":"sec",""" +
       s""""queries":${jmap(cold, _.toString)},"warm_total":$warmTotal,""" +
       s""""queries_warm":${jmap(warm, _.toString)},""" +
+      s""""queries_cpu":${jmap(cpuSecs(coldRaw), _.toString)},""" +
+      s""""queries_warm_cpu":${jmap(cpuSecs(warmRaw), _.toString)},""" +
       s""""stalls_cold":${jmap(coldStalls, _.toString)},""" +
       s""""stalls_warm":${jmap(warmStalls, _.toString)},""" +
       s""""io_mbps_pre":$ioPre,"io_mbps_post":$ioPost,""" +

@@ -802,13 +802,7 @@ object Skew {
         // the warehouse dir outlives the per-JVM Derby metastore
         val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
         val loc = new java.io.File(s"$wh/$db.db/$t")
-        if (loc.exists()) {
-          def rm(f: java.io.File): Unit = {
-            if (f.isDirectory) f.listFiles().foreach(rm)
-            f.delete(): Unit
-          }
-          rm(loc)
-        }
+        graft.util.ScratchIndex.deleteRecursively(loc)
       }
       s.sql(s"CREATE DATABASE IF NOT EXISTS $db")
       lineitem(s, d).select("l_partkey", "l_suppkey", "l_quantity")

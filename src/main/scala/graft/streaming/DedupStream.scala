@@ -129,11 +129,7 @@ object DedupStream {
     // appends accumulating across runs would duplicate the index
     val root = graft.util.ScratchIndex.dir(
       s"lshidx_run_${graft.util.ScratchIndex.corpusTag(dir)}")
-    def rm(f: java.io.File): Unit = {
-      val cs = f.listFiles(); if (cs != null) cs.foreach(rm)
-      f.delete(): Unit
-    }
-    rm(root)
+    graft.util.ScratchIndex.deleteRecursively(root)
     val sigDir = s"$root/sigs"
     val edgeDir = s"$root/edges"
     // seed empty index tables with the exact schemas the appends use,
@@ -158,9 +154,7 @@ object DedupStream {
     // index files), and the per-batch jobs are too small to amortize
     // 32-way task overhead. A real daily stream would compact the
     // appended layer periodically (src_compaction is that operator).
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
+    EventStream.withStreamPartitions(s) {
       val q = s.readStream
         .schema("doc_id LONG, text STRING")
         .option("maxFilesPerTrigger", "1")
@@ -213,13 +207,13 @@ object DedupStream {
             bSigs.coalesce(1).write.mode(SaveMode.Append).parquet(sigDir)
           } finally { bSigs.unpersist(): Unit }
         }
-        // checkpoint lives under the per-run root: the rm above must
+        // checkpoint lives under the per-run root: the delete above must
         // clear it too, or a stale offsets WAL would make a repeat
         // run skip every (memoized) landing file and emit base-only
         .option("checkpointLocation", s"$root/ck")
         .start()
       try q.processAllAvailable() finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+    }
 
     s.read.parquet(edgeDir)
       .unionByName(dedup.baseIndexEdges(s, dir))

@@ -424,9 +424,21 @@ object EventStream {
 
   private val qid = new AtomicInteger(0)
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(deleteRecursively)
-    f.delete(): Unit
+  /** Runs `body` — a bounded stream drain — with the session's shuffle
+    * partitions clamped to 4, restoring the previous value after.
+    * Stateful streaming cost per micro-batch scales with the number
+    * of state-store partitions (a stream-stream join commits 4 stores
+    * per partition per batch), not with data volume — the clamp keeps
+    * state overhead proportional to the actual key cardinality. The
+    * partition count is fixed into the checkpoint at first batch; a
+    * production job sizes it for peak key cardinality up front (state
+    * stores rescale via shuffle, not by re-partitioning the checkpoint).
+    */
+  private[graft] def withStreamPartitions[T](s: SparkSession)(
+      body: => T): T = {
+    val prev = s.conf.get("spark.sql.shuffle.partitions")
+    s.conf.set("spark.sql.shuffle.partitions", "4")
+    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
   /** Run a streaming DataFrame to completion against the bounded
@@ -443,28 +455,10 @@ object EventStream {
     * explicit sink-polling stop; the ORACLED ttl query implements the
     * TTL cell with event-time timers instead (see [[TtlCellProcessor]]).
     */
-  /** State-partition count for the bounded stream drains: 4 by
-    * default (state-store commits cost per partition per batch — see
-    * the comment in [[runToCompletion]]); overridable via conf for
-    * profiling the sensitivity without editing three call sites.
-    */
-  private def streamShufflePartitions(s: SparkSession): String =
-    s.conf.get("spark.graft.stream.shufflePartitions", "4")
-
   private[graft] def runToCompletion(s: SparkSession, df: DataFrame,
       mode: OutputMode): DataFrame = {
     val name = s"graft_stream_${qid.incrementAndGet()}"
-    // Stateful streaming cost per micro-batch scales with the number
-    // of state-store partitions (a stream-stream join commits 4 stores
-    // per partition per batch), not with data volume — clamp the
-    // stream's shuffle partitions so state overhead stays proportional
-    // to the actual key cardinality. The partition count is fixed into
-    // the checkpoint at first batch; a production job sizes it for
-    // peak key cardinality up front (state stores rescale via shuffle,
-    // not by re-partitioning the checkpoint).
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions(s))
-    try {
+    withStreamPartitions(s) {
       // Explicit checkpoint under the scratch root (tmpfs-backed when
       // available): without it Spark puts the temp checkpoint under
       // java.io.tmpdir, and every state-store commit fsyncs there —
@@ -476,7 +470,7 @@ object EventStream {
           graft.util.ScratchIndex.dir(s"ck_$name").toString)
         .format("memory").queryName(name).start()
       try q.processAllAvailable() finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+    }
     s.table(name)
   }
 
@@ -534,17 +528,12 @@ object EventStream {
       : DataFrame = {
     val ckRoot = graft.util.ScratchIndex.dir(
       s"state_src_ck_${qid.incrementAndGet()}")
-    def rm(f: java.io.File): Unit = {
-      val cs = f.listFiles(); if (cs != null) cs.foreach(rm)
-      f.delete(): Unit
-    }
-    rm(ckRoot) // fresh run state: a stale offsets WAL would skip files
+    // fresh run state: a stale offsets WAL would skip files
+    graft.util.ScratchIndex.deleteRecursively(ckRoot)
     val agg = src
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_events"), sum(col("value")).as("sum_value"))
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions(s))
-    try {
+    withStreamPartitions(s) {
       // Update mode + noop batch sink: only changed keys leave the
       // operator each micro-batch and the sink discards them — ALL
       // information flows through the state store, which is the point
@@ -556,7 +545,7 @@ object EventStream {
         }
         .start()
       try q.processAllAvailable() finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+    }
     s.read.format("statestore").option("path", ckRoot.toString).load()
       .select(col("key.user_id").as("user_id"),
         col("value.count").as("n_events"),
@@ -759,12 +748,10 @@ object EventStream {
     // on every run (bench sweeps this twice per round)
     val out = graft.util.ScratchIndex
       .dir(s"febatch_${graft.util.ScratchIndex.corpusTag(dir)}").toString
-    deleteRecursively(new java.io.File(out))
+    graft.util.ScratchIndex.deleteRecursively(new java.io.File(out))
     val src = eventsStream(s, dir)
       .select(col("event_id"), col("event_type"), col("value"))
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions(s))
-    try {
+    withStreamPartitions(s) {
       // qid-scoped checkpoint (NOT a fixed name): the sink dir above is
       // cleared per run, so a reused source WAL would mark every file
       // already-processed and leave the fresh sink empty
@@ -777,7 +764,7 @@ object EventStream {
         }
         .start()
       try q.processAllAvailable() finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+    }
     s.read.parquet(out)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("sum_value"))
@@ -963,11 +950,7 @@ object EventStream {
     val root = ckrecRoot(dir)
     // fresh deterministic scratch per run: recovery must be
     // demonstrated from ITS OWN first half, not a previous run's
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(): Unit
-    }
-    rm(root)
+    graft.util.ScratchIndex.deleteRecursively(root)
     val landing = s"$root/landing"
     val out = s"$root/out"
     val ck = s"$root/ck"
@@ -1421,7 +1404,7 @@ object EventStream {
       val dst = new java.io.File(landing, f"$order%04d.parquet")
       java.nio.file.Files.move(part.toPath, dst.toPath): Unit
       dst.setLastModified(1600000000000L + order * 60000L): Unit
-      deleteRecursively(tmp)
+      graft.util.ScratchIndex.deleteRecursively(tmp)
     }
     land(ev, "ontime", 1)
     land(ev.limit(1).select(lit(-1L).as("event_id"),
@@ -1432,10 +1415,8 @@ object EventStream {
   }
 
   private def lateDataDropCore(s: SparkSession, dir: String,
-      landing: String): DataFrame = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions(s))
-    try {
+      landing: String): DataFrame =
+    withStreamPartitions(s) {
       val agg = s.readStream
         .schema("event_id LONG, event_type STRING, value DOUBLE, ts_us LONG")
         .option("maxFilesPerTrigger", "1")
@@ -1457,8 +1438,7 @@ object EventStream {
         .select(expr("unix_timestamp(window.start) div 3600").as("bucket"),
           col("event_type"), col("n_events"), col("sum_value"))
         .orderBy("bucket", "event_type")
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+    }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "stream_ckpt_recovery"   -> (checkpointRecovery _),

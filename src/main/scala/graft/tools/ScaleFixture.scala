@@ -84,13 +84,7 @@ object ScaleFixture {
         if (files <= 1) 1
         else math.max(1, math.min(64, files * copies / 10))
       val dst = new java.io.File(s"$outDir/$name.parquet")
-      if (dst.exists()) {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm)
-          f.delete(): Unit
-        }
-        rm(dst)
-      }
+      graft.util.ScratchIndex.deleteRecursively(dst)
       if (parts == 1) {
         val tmp = new java.io.File(s"$outDir/_tmp_$name")
         df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)

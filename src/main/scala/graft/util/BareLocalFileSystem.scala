@@ -3,24 +3,36 @@ package graft.util
 import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 
-/** Local filesystem without permission management — the engine's
-  * `file:` scheme implementation for hosts WITHOUT the Hadoop native
-  * library (this sandbox has no libhadoop.so).
+/** Local filesystem that never forks a process — the engine's `file:`
+  * scheme implementation for hosts WITHOUT the Hadoop native library
+  * (no libhadoop.so). Without NativeIO, `RawLocalFileSystem` shells
+  * out at three sites on the write path, each a process fork+exec:
   *
-  * Why: without NativeIO, `RawLocalFileSystem.setPermission` shells
-  * out to `chmod` — and `createOutputStreamWithMode` /
-  * `mkOneDirWithMode` call it for EVERY created file and directory,
-  * so every parquet part file, checksum `.crc`, streaming-checkpoint
-  * WAL entry and state-store delta pays a process fork+exec on the
-  * write path (observed directly via jstack during the
-  * stream_lsh_index micro-batches: `Shell.runCommand` →
-  * `ProcessImpl.forkAndExec`). Likewise
-  * `DeprecatedRawLocalFileStatus.loadPermissionInfo` forks `ls` when
-  * a listed status's permission is first read. None of these
-  * permissions carry meaning for per-JVM scratch, bench sinks or
-  * read-only testdata, so both paths are overridden to no-ops: chmod
-  * is skipped outright, and file statuses report the default
-  * permission without the lazy shell probe.
+  *  - `chmod`: `setPermission`, which `createOutputStreamWithMode` /
+  *    `mkOneDirWithMode` call for EVERY created file and directory —
+  *    every parquet part file, checksum `.crc`, streaming-checkpoint
+  *    WAL entry and state-store delta (seen in jstack during the
+  *    stream_lsh_index micro-batches: `Shell.runCommand` →
+  *    `ProcessImpl.forkAndExec`);
+  *  - `ls -ld`: `DeprecatedRawLocalFileStatus.loadPermissionInfo`,
+  *    the first time a listed status's permission or owner is read;
+  *  - `readlink`: `getFileLinkStatus`, which `FileContext.rename`
+  *    asks of every checkpoint file Spark renames into place (offset,
+  *    commit and source logs, state-store deltas and their checksums,
+  *    state-schema and operator metadata). The inherited non-native
+  *    path runs `readlink` on `f.toString`, which for the qualified
+  *    `file:/…` paths FileContext passes is a relative path that does
+  *    not exist — so the fork never even reports a symlink.
+  *
+  * None of these permissions carry meaning for per-JVM scratch, bench
+  * sinks or read-only testdata, so chmod is skipped, statuses report
+  * the default permission, and link status asks the JVM
+  * (`Files.isSymbolicLink`) before falling back to the inherited
+  * method for a real symlink.
+  *
+  * One fork remains, inside Spark and out of reach here: RocksDB
+  * instance cleanup goes through `JavaUtils.deleteRecursively`, which
+  * runs `rm -rf` (12 per `stream_tws_totals` run).
   *
   * Semantics: identical bytes in, identical bytes out — only the
   * POSIX permission side-channel is dropped, exactly what the
@@ -43,7 +55,9 @@ class BareRawLocalFs(uri: java.net.URI,
   override def getUriDefaultPort: Int = -1
 }
 
-/** RawLocalFileSystem whose permission operations never fork. */
+/** RawLocalFileSystem whose permission and link-status operations
+  * never fork.
+  */
 class BareRawLocalFileSystem extends RawLocalFileSystem {
   override def setPermission(p: Path, permission: FsPermission): Unit = ()
 
@@ -61,4 +75,12 @@ class BareRawLocalFileSystem extends RawLocalFileSystem {
 
   override def listStatus(f: Path): Array[org.apache.hadoop.fs.FileStatus] =
     super.listStatus(f).map(noPerm)
+
+  // a non-symlink's link status is its file status (what the inherited
+  // method returns once its `readlink` fork reports no target); a
+  // missing path still throws FileNotFoundException from getFileStatus
+  override def getFileLinkStatus(f: Path): org.apache.hadoop.fs.FileStatus =
+    if (java.nio.file.Files.isSymbolicLink(pathToFile(f).toPath))
+      super.getFileLinkStatus(f)
+    else getFileStatus(f)
 }

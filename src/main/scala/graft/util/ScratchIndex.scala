@@ -272,7 +272,11 @@ object ScratchIndex {
   def corpusTag(path: String): String =
     path.replaceAll("[^A-Za-z0-9_]", "_")
 
-  private def deleteRecursively(f: File): Unit = {
+  /** Deletes `f` and everything under it; a missing `f` is a no-op.
+    * Plain `java.io` on purpose: Spark's `JavaUtils.deleteRecursively`
+    * forks `rm -rf`.
+    */
+  private[graft] def deleteRecursively(f: File): Unit = {
     val children = f.listFiles()
     if (children != null) children.foreach(deleteRecursively)
     f.delete(): Unit
