@@ -57,30 +57,9 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
+    // perfbench's Harness builds the same session: keep them in step
+    val spark = graft.util.Confs.session(cpus)
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // static conf, default 100: a 144-query sweep generates several
-      // hundred codegen units, so the default cache thrashes and the
-      // warm pass re-compiles nearly every plan — Janino compilation
-      // is the dominant per-query fixed cost
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // shuffle spill / broadcast scratch / RocksDB working files on
-      // the tmpfs-backed scratch base — see ScratchIndex: the bench
-      // measures plans, not the host disk's fsync backlog
-      .config("spark.local.dir", graft.util.ScratchIndex.sparkLocalDir())
-      .config("spark.sql.warehouse.dir", graft.util.ScratchIndex.warehouseDir())
-      // local FS without permission forks: absent the Hadoop native
-      // library, every created file/dir shells out to `chmod` (and
-      // permission reads to `ls`) — a process fork per parquet part,
-      // .crc and checkpoint file on the write path. See
-      // graft.util.BareLocalFileSystem.
-      .config("spark.hadoop.fs.file.impl",
-        "graft.util.BareLocalFileSystem")
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "graft.util.BareLocalFs")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -146,15 +125,12 @@ object Bench {
     spark.range(0, 200)
       .selectExpr("timestamp_micros(1700000000000000 + id*1000000) AS ts")
       .coalesce(1).write.mode("overwrite").parquet(warmSrc.toString)
-    def warmStream(provider: Option[String]): Unit = {
+    def warmStream(rocksDb: Boolean): Unit = {
       import org.apache.spark.sql.functions._
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = spark.conf.getOption(key)
-      provider.foreach(spark.conf.set(key, _))
       // the sweep's own state sizing: per-batch cost is state-store
       // commits x partitions, and the warm-up only needs to touch the
       // machinery once per provider
-      try graft.streaming.EventStream.withStreamPartitions(spark) {
+      def drain(): Unit = graft.streaming.EventStream.withStreamPartitions(spark) {
         val q = spark.readStream.schema("ts TIMESTAMP")
           .parquet(warmSrc.toString)
           .withWatermark("ts", "0 seconds")
@@ -162,19 +138,16 @@ object Bench {
           .agg(count(lit(1)).as("n"))
           .writeStream.outputMode("append")
           .option("checkpointLocation",
-            graft.util.ScratchIndex.dir(
-              s"ck_warmup_${provider.isDefined}").toString)
-          .format("memory").queryName(s"warmup_${provider.isDefined}")
+            graft.util.ScratchIndex.dir(s"ck_warmup_$rocksDb").toString)
+          .format("memory").queryName(s"warmup_$rocksDb")
           .start()
         try q.processAllAvailable() finally q.stop()
-      } finally provider.foreach(_ => prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      })
+      }
+      if (rocksDb) graft.streaming.EventStream.withRocksDb(spark)(drain())
+      else drain()
     }
-    warmStream(None)
-    warmStream(Some("org.apache.spark.sql.execution.streaming" +
-      ".state.RocksDBStateStoreProvider"))
+    warmStream(rocksDb = false)
+    warmStream(rocksDb = true)
 
     // fsync'd sequential-write probe (same measurement as the manual
     // `dd conv=fdatasync` diagnosis of the round-4/5 throttle

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,19 +10,8 @@ object Verify {
     val only: Option[Seq[String]] =
       if (args.length > 2) Some(args(2).split(',').toSeq) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
+    val spark = graft.util.Confs.session(cpus)
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.local.dir", graft.util.ScratchIndex.sparkLocalDir())
-      .config("spark.sql.warehouse.dir", graft.util.ScratchIndex.warehouseDir())
-      // no-fork local FS — see graft.util.BareLocalFileSystem
-      .config("spark.hadoop.fs.file.impl",
-        "graft.util.BareLocalFileSystem")
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "graft.util.BareLocalFs")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // one line of scan provenance in the driver log: the generator

@@ -629,7 +629,7 @@ object Dedup {
         // hold 2^k leaf copies and the plan-description string alone
         // OOMs the driver on a deep forest (a 4096-chain needs k=12),
         // so every doubling starts from the truncated previous one
-        val m2 = sc.next("flatten", m.as("x")
+        val m2 = sc.next(m.as("x")
           .join(m.as("y"), col("x.label") === col("y.node"), "left_outer")
           .select(col("x.node").as("node"),
             coalesce(col("y.label"), col("x.label")).as("label"),

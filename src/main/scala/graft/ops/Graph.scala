@@ -181,7 +181,7 @@ object Graph {
       // side AND every prior hop's tree through the visited union —
       // the r17 BFS round-plan dump was ~35k lines by the last hop,
       // all planning cost, none of it computation (the data is cached)
-      frontier = sc.next("bfs", frontier.join(e, frontier("v") === e("a"))
+      frontier = sc.next(frontier.join(e, frontier("v") === e("a"))
         .select(col("b").as("v")).distinct()
         .join(visited.select(col("v")), Seq("v"), "left_anti"))
       counts += frontier.count()
@@ -274,7 +274,7 @@ object Graph {
         var ranks = deg
           .select(col("src").as("v"), lit(1.0 / n).as("rank"))
         for (_ <- 1 to PrIters) {
-          ranks = sc.next("pagerank", ce.join(ranks, ce("src") === ranks("v"))
+          ranks = sc.next(ce.join(ranks, ce("src") === ranks("v"))
             .groupBy(col("dst"))
             .agg((lit(0.15 / n) + lit(Damping) *
               sum(col("rank") / col("degree"))).as("rank"))
@@ -345,6 +345,12 @@ object Graph {
       |FROM r5 JOIN deg ON r5.v = deg.v
       |ORDER BY r5.v""".stripMargin
 
+  /** Broadcast cap of the common-neighbors adjacency: 64 MiB is far
+    * under the "few hundred MB is usually fine" broadcast guidance and
+    * leaves the sf10+ regime on the measured shuffle-hash plan.
+    */
+  private val AdjBcastMaxBytes = 64L << 20
+
   /** Link-prediction features for the top co-purchase edges: for each
     * existing edge (p1, p2), the common-neighbor count (the edge's
     * embeddedness — its triangle support) and the Jaccard similarity
@@ -402,15 +408,11 @@ object Graph {
     //    shuffle-partition count, and the partition count tracks
     //    input bytes (the repo sizing rule), so the per-task build
     //    map stays bounded at any corpus size.
-    // The cap is a conf (bytes of parquet, ≈ in-memory footprint for
-    // uncompressed long arrays); the 64 MB default is far under the
-    // "few hundred MB is usually fine" broadcast guidance and leaves
-    // the sf10+ regime on the measured shuffle-hash plan.
+    // The cap is [[AdjBcastMaxBytes]] of parquet (≈ the in-memory
+    // footprint of uncompressed long arrays).
     val adjBytes = graft.util.ScratchIndex.artifactBytes(adjKey)
-    val bcastCap = s.conf.get(
-      "spark.graft.graph.adjBcastMaxBytes", (64L << 20).toString).toLong
     def adjSide(df: DataFrame): DataFrame =
-      if (adjBytes > 0 && adjBytes <= bcastCap) broadcast(df)
+      if (adjBytes > 0 && adjBytes <= AdjBcastMaxBytes) broadcast(df)
       else df.hint("shuffle_hash")
     e0
       .join(adjSide(adj.withColumnRenamed("nbrs", "na")),
@@ -515,7 +517,7 @@ object Graph {
         // materialize the persisted seed once (round 1 consumes it)
         labels.count(): Unit
         for (_ <- 1 to LpRounds) {
-          labels = sc.next("labelprop", e.join(labels, e("src") === labels("v"))
+          labels = sc.next(e.join(labels, e("src") === labels("v"))
             .select(col("dst").as("v"), col("lbl"))
             .unionAll(labels)
             .groupBy(col("v")).agg(min(col("lbl")).as("lbl")))
@@ -1328,7 +1330,7 @@ object Graph {
           alive = surv.count() > 0L
           if (alive) {
             tagged = tagged.unionAll(surv.withColumn("r", lit(r.toLong)))
-            edges = sc.next("kcore", edges
+            edges = sc.next(edges
               .join(surv, edges("src") === surv("v"), "left_semi")
               .join(surv, edges("dst") === surv("v"), "left_semi"))
           }

@@ -842,7 +842,7 @@ object Relational3 {
     * max date) over any orders subset — shared by the persisted base
     * state, the delta state, and the full-rebuild replay.
     */
-  private def aggStateOf(df: DataFrame): DataFrame = df
+  private[graft] def aggStateOf(df: DataFrame): DataFrame = df
     .groupBy(col("o_custkey"))
     .agg(count(lit(1)).as("n_orders"),
       sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("cents"),

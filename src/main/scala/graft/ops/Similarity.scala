@@ -485,19 +485,6 @@ object Similarity {
     baseIvfPostings(s, d)
       .unionByName(readLayer(s, deltaIvfPostingsPath(s, d)))
 
-  /** What the daily path replaces, for Profile's incivf measurement:
-    * retrain the quantizer on today's FULL corpus (fresh Lloyd run —
-    * deliberately not the memoized `ivfCentroids`, whose key this
-    * bypasses so repeated profiling stays honest) and reassign every
-    * vector. Not a registered query — `sim_ann_ivf` is the user-facing
-    * from-scratch index; this exists so the profile times maintenance
-    * work alone, apart from the query path both indexes share.
-    */
-  private[graft] def rebuildIvfPostings(s: SparkSession, d: String): DataFrame = {
-    val emb = embRelation(s, d)
-    emb.withColumn("cent_id", bestCentroid(trainIvfCentroids(emb)))
-  }
-
   /** ANN top-3 served from the incrementally-maintained index — the
     * same query path as `sim_ann_ivf` ([[ivfAnswer]] is shared code),
     * differing only in index provenance. Approximate by construction →

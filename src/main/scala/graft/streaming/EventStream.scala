@@ -435,10 +435,29 @@ object EventStream {
     * stores rescale via shuffle, not by re-partitioning the checkpoint).
     */
   private[graft] def withStreamPartitions[T](s: SparkSession)(
-      body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      body: => T): T =
+    graft.util.Confs.withConfs(s)("spark.sql.shuffle.partitions" -> "4")(body)
+
+  /** Runs `body` on the RocksDB state-store provider — the backend
+    * for large state (spills to local disk + changelog instead of
+    * holding every key on-heap). The provider is fixed into a query at
+    * stream start, so it is set for the drain and restored after;
+    * results are backend-independent.
+    */
+  private[graft] def withRocksDb[T](s: SparkSession)(body: => T): T =
+    graft.util.Confs.withConfs(s)(
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
+
+  /** The drained memory sink `name` as a frame, with its temp view
+    * dropped: the frame's plan holds the sink itself, so its rows stay
+    * readable, and a session that drains many streams keeps no result
+    * it no longer references.
+    */
+  private def drained(s: SparkSession, name: String): DataFrame = {
+    val df = s.table(name)
+    s.catalog.dropTempView(name)
+    df
   }
 
   /** Run a streaming DataFrame to completion against the bounded
@@ -471,7 +490,7 @@ object EventStream {
         .format("memory").queryName(name).start()
       try q.processAllAvailable() finally q.stop()
     }
-    s.table(name)
+    drained(s, name)
   }
 
   /** The events stream in the engine-canonical event-time schema
@@ -809,17 +828,8 @@ object EventStream {
     * results are backend-independent (same oracle as the HDFS-backed
     * form — that IS the check).
     */
-  def tumblingCountsRocksDb(s: SparkSession, dir: String): DataFrame = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try tumblingCounts(s, dir)
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
+  def tumblingCountsRocksDb(s: SparkSession, dir: String): DataFrame =
+    withRocksDb(s)(tumblingCounts(s, dir))
 
   /** Rate-source smoke: the built-in synthetic streaming source
     * (`format("rate")`) driven for a bounded number of rows — the
@@ -840,7 +850,7 @@ object EventStream {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     try q.processAllAvailable() finally q.stop()
-    s.table(name).agg(count(lit(1)).as("n_rows"),
+    drained(s, name).agg(count(lit(1)).as("n_rows"),
       min(col("value")).as("first_value"))
   }
 
@@ -1024,11 +1034,7 @@ object EventStream {
     */
   def twsTotals(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb(s) {
       val src = eventsStream(s, dir)
         .select(col("user_id"), col("value")).as[EvVal]
       val out = src.groupByKey(_.user_id)
@@ -1042,9 +1048,6 @@ object EventStream {
         .select(col("user_id"), col("fin.n_events").as("n_events"),
           round(col("fin.sum_value"), 4).as("sum_value"))
         .orderBy("user_id")
-    } finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
     }
   }
 
@@ -1061,11 +1064,7 @@ object EventStream {
     */
   def twsMapTotals(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb(s) {
       val src = eventsStream(s, dir)
         .select(col("user_id"), col("event_type"), col("value")).as[EvTyped]
       val out = src.groupByKey(_.user_id)
@@ -1080,9 +1079,6 @@ object EventStream {
           col("fin.n_events").as("n_events"),
           round(col("fin.sum_value"), 4).as("sum_value"))
         .orderBy("user_id", "event_type")
-    } finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
     }
   }
 
@@ -1104,11 +1100,7 @@ object EventStream {
     */
   def twsBootstrap(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb(s) {
       val seed = graft.util.Tables.events(s, dir)
         .filter(col("event_id") % 2 === 0)
         .groupBy(col("user_id"))
@@ -1130,9 +1122,6 @@ object EventStream {
           round(col("fin.sum_value"), 4).as("sum_value"),
           col("fin.n_seed_events").as("n_seed_events"))
         .orderBy("user_id")
-    } finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
     }
   }
 
@@ -1161,17 +1150,8 @@ object EventStream {
     * A TTL that failed to evict (or evicted early) would change which
     * runs are emitted and hash-diverge.
     */
-  def twsTtlEvictions(s: SparkSession, dir: String): DataFrame = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try twsTtlEvictionsCore(s, eventsStream(s, dir))
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
-    }
-  }
+  def twsTtlEvictions(s: SparkSession, dir: String): DataFrame =
+    withRocksDb(s)(twsTtlEvictionsCore(s, eventsStream(s, dir)))
 
   /** Core of `twsTtlEvictions` against any events-shaped stream — the
     * spec feeds a staged multi-file landing through it. Caller owns
@@ -1256,17 +1236,8 @@ object EventStream {
     * is spec-replayed one-file-per-trigger over time-range-split
     * landings.
     */
-  def twsSessionTimers(s: SparkSession, dir: String): DataFrame = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try twsSessionTimersCore(s, eventsStream(s, dir))
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
-    }
-  }
+  def twsSessionTimers(s: SparkSession, dir: String): DataFrame =
+    withRocksDb(s)(twsSessionTimersCore(s, eventsStream(s, dir)))
 
   /** Core of `twsSessionTimers` against any events-shaped stream —
     * the spec feeds a staged multi-file landing through it. Caller
@@ -1434,7 +1405,7 @@ object EventStream {
       try q.processAllAvailable() finally q.stop()
       lateDropCounts.put(dir, q.recentProgress
         .flatMap(p => p.stateOperators.map(_.numRowsDroppedByWatermark)).sum)
-      s.table(name)
+      drained(s, name)
         .select(expr("unix_timestamp(window.start) div 3600").as("bucket"),
           col("event_type"), col("n_events"), col("sum_value"))
         .orderBy("bucket", "event_type")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** PROFILING-ONLY scale-up fixture: replicates the driver testdata at
@@ -45,18 +45,8 @@ object ScaleFixture {
     val outDir = if (args.length > 1) args(1) else "/root/repo/.scale/sf1"
     val copies = if (args.length > 2) args(2).toInt else 10
     val mode = if (args.length > 3) args(3) else "full"
-    val spark = SparkSession.builder()
+    val spark = graft.util.Confs.session("32")
       .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.util.ScratchIndex.sparkLocalDir())
-      .config("spark.sql.warehouse.dir", graft.util.ScratchIndex.warehouseDir())
-      // no-fork local FS — see graft.util.BareLocalFileSystem
-      .config("spark.hadoop.fs.file.impl",
-        "graft.util.BareLocalFileSystem")
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "graft.util.BareLocalFs")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

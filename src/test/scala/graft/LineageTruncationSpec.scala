@@ -74,7 +74,7 @@ class LineageTruncationSpec extends SparkTestBase {
   private def pinAndStep(sc: LoopScope): Seq[DataFrame] = {
     val seed = sc.pin(spark.range(0, 100).toDF("id"))
     val round = seed.select((col("id") * 2).as("id"))
-    assert(sc.next("loopscope_spec", round).count() === 100L)
+    assert(sc.next(round).count() === 100L)
     Seq(seed, round)
   }
 

@@ -38,6 +38,20 @@ class MultimodalStreamSpec extends SparkTestBase {
     assert(streamed === batch)
   }
 
+  test("a stream drain drops its memory-sink view and the frame keeps its rows") {
+    def sinkViews = spark.catalog.listTables().collect()
+      .filter(t => t.isTemporary && t.name.startsWith("graft_")).map(_.name).toSeq
+    val drained = graft.SparkEntry.queries("stream_tumbling_window")(spark, sf)
+    assert(sinkViews === Seq.empty)
+    val rows = drained.select($"bucket", $"event_type", $"n_events")
+      .as[(Long, String, Long)].collect().toSet
+    val batch = graft.ops.Events.tumblingWindow(spark, sf)
+      .select($"bucket", $"event_type", $"n_events")
+      .as[(Long, String, Long)].collect().toSet
+    assert(rows.nonEmpty)
+    assert(rows === batch)
+  }
+
   test("streaming KLL sketch state: quantile ranks inside the bound") {
     val r = EventStream.kllSketchStream(spark, sf)
       .select($"event_type", $"approx_p50", $"approx_p90")

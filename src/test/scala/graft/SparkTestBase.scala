@@ -13,28 +13,17 @@ trait SparkTestBase extends AnyFunSuite {
 
 object SparkTestBase {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
+    val s = graft.util.Confs.session("4")
       // local[4, 2] = 4 threads, 2 task attempts: StreamCrashSpec's
       // injected first-attempt task failures need a retry budget
       // (plain local[N] fails the job on the first task failure)
       .master("local[4, 2]")
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
       // plan-quality specs assert on scan metadata (PushedFilters /
       // Location); the 100-char default truncates multi-bound
       // envelopes mid-list and the assertion would pass/fail on
       // which bound got cut, not on what was pushed
       .config("spark.sql.maxMetadataStringLength", "2000")
-      .config("spark.local.dir", graft.util.ScratchIndex.sparkLocalDir())
-      .config("spark.sql.warehouse.dir", graft.util.ScratchIndex.warehouseDir())
-      // no-fork local FS — see graft.util.BareLocalFileSystem
-      .config("spark.hadoop.fs.file.impl",
-        "graft.util.BareLocalFileSystem")
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "graft.util.BareLocalFs")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
