@@ -130,8 +130,8 @@ object Bench {
       // the sweep's own state sizing: per-batch cost is state-store
       // commits x partitions, and the warm-up only needs to touch the
       // machinery once per provider
-      def drain(): Unit = graft.streaming.EventStream.withStreamPartitions(spark) {
-        val q = spark.readStream.schema("ts TIMESTAMP")
+      def drain(): Unit = graft.streaming.EventStream.drain(spark)(
+        spark.readStream.schema("ts TIMESTAMP")
           .parquet(warmSrc.toString)
           .withWatermark("ts", "0 seconds")
           .groupBy(window(col("ts"), "10 seconds"))
@@ -140,9 +140,7 @@ object Bench {
           .option("checkpointLocation",
             graft.util.ScratchIndex.dir(s"ck_warmup_$rocksDb").toString)
           .format("memory").queryName(s"warmup_$rocksDb")
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
+          .start()): Unit
       if (rocksDb) graft.streaming.EventStream.withRocksDb(spark)(drain())
       else drain()
     }

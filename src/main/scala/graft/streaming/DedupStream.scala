@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -30,6 +31,9 @@ case class DupCand(a_id: Long, b_id: Long, est_jaccard: Double)
 object DedupStream {
 
   private val EstThreshold = 0.5
+
+  /** Built once per JVM, like EventStream's sessionization state encoder. */
+  private implicit val seenState: Encoder[List[(Long, Seq[Long])]] = ExpressionEncoder()
 
   /** Streaming documents relation for an sf dir. */
   private def documentsStream(s: SparkSession, dir: String): DataFrame = {
@@ -154,66 +158,63 @@ object DedupStream {
     // index files), and the per-batch jobs are too small to amortize
     // 32-way task overhead. A real daily stream would compact the
     // appended layer periodically (src_compaction is that operator).
-    EventStream.withStreamPartitions(s) {
-      val q = s.readStream
-        .schema("doc_id LONG, text STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(landing)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val ss = batch.sparkSession
-          lastIndexRunBatches.incrementAndGet(): Unit
-          val bSigs = dedup.minhashSignatures(
-            batch.select(col("doc_id"), col("text")))
-            .select(col("doc_id"), col("sig"),
-              dedup.shingles(col("text")).as("sh"))
-            .persist()
-          try {
-            val bBands = dedup.bandsOf(bSigs)
-              .select(col("doc_id"), col("band_idx"), col("band_sig"))
-            val idxBands = dedup.baseIndexBands(ss, dir)
-              .unionByName(dedup.bandsOf(ss.read.parquet(sigDir))
-                .select(col("doc_id"), col("band_idx"), col("band_sig")))
-              .unionByName(bBands)
-            // the probe side is ONE micro-batch's band rows —
-            // broadcast-sized by construction (the bcastDelta argument
-            // of Dedup.deltaVerifiedEdges) — so the index side streams
-            // through the band join with no exchange
-            val cand = idxBands.as("x").join(broadcast(bBands.as("y")),
-                col("x.band_idx") === col("y.band_idx")
-                  && col("x.band_sig") === col("y.band_sig")
-                  && col("x.doc_id") =!= col("y.doc_id"))
-              .select(least(col("x.doc_id"), col("y.doc_id")).as("a_id"),
-                greatest(col("x.doc_id"), col("y.doc_id")).as("b_id"))
-              .distinct()
-            val allSigs = dedup.baseIndexSigs(ss, dir)
-              .unionByName(ss.read.parquet(sigDir))
-              .unionByName(bSigs)
-            // candidates are delta-bounded per batch: broadcast them
-            // into both verify joins so the wide signature relation
-            // (sig + shingle payloads) is never shuffled per batch
-            dedup.verifyEdges(cand, allSigs, bcastCand = true)
-              // edges: NOT coalesced — coalesce(1) here would collapse
-              // the whole band-join + verify stage to one task
-              // (measured: 67 s vs 26 s at sf10), and edgeDir is only
-              // read once at the end, so its file count is harmless
-              .write.mode(SaveMode.Append).parquet(edgeDir)
-            // index append AFTER mining: the batch probed itself via
-            // bBands, so appending first would only double-mine.
-            // This layer IS re-read by every later batch, and the
-            // write sits at a pipeline break (bSigs is persisted), so
-            // one file per append costs nothing and avoids the
-            // small-file tax
-            bSigs.coalesce(1).write.mode(SaveMode.Append).parquet(sigDir)
-          } finally { bSigs.unpersist(): Unit }
-        }
-        // checkpoint lives under the per-run root: the delete above must
-        // clear it too, or a stale offsets WAL would make a repeat
-        // run skip every (memoized) landing file and emit base-only
-        .option("checkpointLocation", s"$root/ck")
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
+    EventStream.drain(s)(s.readStream
+      .schema("doc_id LONG, text STRING")
+      .option("maxFilesPerTrigger", "1")
+      .parquet(landing)
+      .writeStream
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        val ss = batch.sparkSession
+        lastIndexRunBatches.incrementAndGet(): Unit
+        val bSigs = dedup.minhashSignatures(
+          batch.select(col("doc_id"), col("text")))
+          .select(col("doc_id"), col("sig"),
+            dedup.shingles(col("text")).as("sh"))
+          .persist()
+        try {
+          val bBands = dedup.bandsOf(bSigs)
+            .select(col("doc_id"), col("band_idx"), col("band_sig"))
+          val idxBands = dedup.baseIndexBands(ss, dir)
+            .unionByName(dedup.bandsOf(ss.read.parquet(sigDir))
+              .select(col("doc_id"), col("band_idx"), col("band_sig")))
+            .unionByName(bBands)
+          // the probe side is ONE micro-batch's band rows —
+          // broadcast-sized by construction (the bcastDelta argument
+          // of Dedup.deltaVerifiedEdges) — so the index side streams
+          // through the band join with no exchange
+          val cand = idxBands.as("x").join(broadcast(bBands.as("y")),
+              col("x.band_idx") === col("y.band_idx")
+                && col("x.band_sig") === col("y.band_sig")
+                && col("x.doc_id") =!= col("y.doc_id"))
+            .select(least(col("x.doc_id"), col("y.doc_id")).as("a_id"),
+              greatest(col("x.doc_id"), col("y.doc_id")).as("b_id"))
+            .distinct()
+          val allSigs = dedup.baseIndexSigs(ss, dir)
+            .unionByName(ss.read.parquet(sigDir))
+            .unionByName(bSigs)
+          // candidates are delta-bounded per batch: broadcast them
+          // into both verify joins so the wide signature relation
+          // (sig + shingle payloads) is never shuffled per batch
+          dedup.verifyEdges(cand, allSigs, bcastCand = true)
+            // edges: NOT coalesced — coalesce(1) here would collapse
+            // the whole band-join + verify stage to one task
+            // (measured: 67 s vs 26 s at sf10), and edgeDir is only
+            // read once at the end, so its file count is harmless
+            .write.mode(SaveMode.Append).parquet(edgeDir)
+          // index append AFTER mining: the batch probed itself via
+          // bBands, so appending first would only double-mine.
+          // This layer IS re-read by every later batch, and the
+          // write sits at a pipeline break (bSigs is persisted), so
+          // one file per append costs nothing and avoids the
+          // small-file tax
+          bSigs.coalesce(1).write.mode(SaveMode.Append).parquet(sigDir)
+        } finally { bSigs.unpersist(): Unit }
+      }
+      // checkpoint lives under the per-run root: the delete above must
+      // clear it too, or a stale offsets WAL would make a repeat
+      // run skip every (memoized) landing file and emit base-only
+      .option("checkpointLocation", s"$root/ck")
+      .start()): Unit
 
     s.read.parquet(edgeDir)
       .unionByName(dedup.baseIndexEdges(s, dir))

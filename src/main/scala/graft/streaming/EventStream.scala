@@ -2,9 +2,10 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Structured Streaming surface over the `events` table: the same
   * shapes as graft.ops.Events (tumbling windows, sessionization) but
@@ -424,19 +425,32 @@ object EventStream {
 
   private val qid = new AtomicInteger(0)
 
-  /** Runs `body` — a bounded stream drain — with the session's shuffle
-    * partitions clamped to 4, restoring the previous value after.
-    * Stateful streaming cost per micro-batch scales with the number
-    * of state-store partitions (a stream-stream join commits 4 stores
-    * per partition per batch), not with data volume — the clamp keeps
-    * state overhead proportional to the actual key cardinality. The
-    * partition count is fixed into the checkpoint at first batch; a
-    * production job sizes it for peak key cardinality up front (state
-    * stores rescale via shuffle, not by re-partitioning the checkpoint).
+  /** Built once: each encoder build numbers its collection lambda variables
+    * afresh, and Spark renumbers them in the optimized plan but not in a
+    * `GroupState` serializer, so a per-run one recompiles on every run. */
+  private implicit val tsListState: Encoder[List[Long]] = ExpressionEncoder()
+
+  /** Starts a bounded stream, drains it and stops it; returns the
+    * stopped query. Every graft stream starts here, under two confs
+    * that `start()`'s session clone copies and that are restored after:
+    *  - 4 shuffle partitions: per-batch stateful cost scales with the
+    *    state-store partition count (fixed into the checkpoint at the
+    *    first batch), not with data volume.
+    *  - Artifact isolation off: with it on, Spark 4.1.2 gives each clone
+    *    a new executor class loader, and `CodeGenerator` caches by (class
+    *    loader, code), so every run recompiled identical code and pinned
+    *    its loader in the cache (StreamLayoutSpec guards this). Artifacts
+    *    added to one isolation-off session are visible to all of them;
+    *    graft adds none, so this hides nothing.
     */
-  private[graft] def withStreamPartitions[T](s: SparkSession)(
-      body: => T): T =
-    graft.util.Confs.withConfs(s)("spark.sql.shuffle.partitions" -> "4")(body)
+  private[graft] def drain(s: SparkSession)(
+      start: => StreamingQuery): StreamingQuery =
+    graft.util.Confs.withConfs(s)("spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.artifact.isolation.enabled" -> "false") {
+      val q = start
+      try q.processAllAvailable() finally q.stop()
+      q
+    }
 
   /** Runs `body` on the RocksDB state-store provider — the backend
     * for large state (spills to local disk + changelog instead of
@@ -477,19 +491,16 @@ object EventStream {
   private[graft] def runToCompletion(s: SparkSession, df: DataFrame,
       mode: OutputMode): DataFrame = {
     val name = s"graft_stream_${qid.incrementAndGet()}"
-    withStreamPartitions(s) {
-      // Explicit checkpoint under the scratch root (tmpfs-backed when
-      // available): without it Spark puts the temp checkpoint under
-      // java.io.tmpdir, and every state-store commit fsyncs there —
-      // on a throttled host that disk traffic, not the plan, dominated
-      // the stateful queries' measured time. Checkpoint state is
-      // per-query-run and discarded, so RAM-backed storage is correct.
-      val q = df.writeStream.outputMode(mode)
-        .option("checkpointLocation",
-          graft.util.ScratchIndex.dir(s"ck_$name").toString)
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
+    // Explicit checkpoint under the scratch root (tmpfs-backed when
+    // available): without it Spark puts the temp checkpoint under
+    // java.io.tmpdir, and every state-store commit fsyncs there —
+    // on a throttled host that disk traffic, not the plan, dominated
+    // the stateful queries' measured time. Checkpoint state is
+    // per-query-run and discarded, so RAM-backed storage is correct.
+    drain(s)(df.writeStream.outputMode(mode)
+      .option("checkpointLocation",
+        graft.util.ScratchIndex.dir(s"ck_$name").toString)
+      .format("memory").queryName(name).start()): Unit
     drained(s, name)
   }
 
@@ -552,19 +563,16 @@ object EventStream {
     val agg = src
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_events"), sum(col("value")).as("sum_value"))
-    withStreamPartitions(s) {
-      // Update mode + noop batch sink: only changed keys leave the
-      // operator each micro-batch and the sink discards them — ALL
-      // information flows through the state store, which is the point
-      val q = agg.writeStream.outputMode(OutputMode.Update())
-        .option("checkpointLocation", ckRoot.toString)
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          lastStateRunBatches.incrementAndGet(): Unit
-          b.write.format("noop").mode("overwrite").save()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
+    // Update mode + noop batch sink: only changed keys leave the
+    // operator each micro-batch and the sink discards them — ALL
+    // information flows through the state store, which is the point
+    drain(s)(agg.writeStream.outputMode(OutputMode.Update())
+      .option("checkpointLocation", ckRoot.toString)
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        lastStateRunBatches.incrementAndGet(): Unit
+        b.write.format("noop").mode("overwrite").save()
+      }
+      .start()): Unit
     s.read.format("statestore").option("path", ckRoot.toString).load()
       .select(col("key.user_id").as("user_id"),
         col("value.count").as("n_events"),
@@ -770,20 +778,17 @@ object EventStream {
     graft.util.ScratchIndex.deleteRecursively(new java.io.File(out))
     val src = eventsStream(s, dir)
       .select(col("event_id"), col("event_type"), col("value"))
-    withStreamPartitions(s) {
-      // qid-scoped checkpoint (NOT a fixed name): the sink dir above is
-      // cleared per run, so a reused source WAL would mark every file
-      // already-processed and leave the fresh sink empty
-      val q = src.writeStream
-        .option("checkpointLocation", graft.util.ScratchIndex
-          .dir(s"ck_febatch_${qid.incrementAndGet()}").toString)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-            org.apache.spark.sql.Row], _: Long) =>
-          batch.write.mode("append").parquet(out)
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
+    // qid-scoped checkpoint (NOT a fixed name): the sink dir above is
+    // cleared per run, so a reused source WAL would mark every file
+    // already-processed and leave the fresh sink empty
+    drain(s)(src.writeStream
+      .option("checkpointLocation", graft.util.ScratchIndex
+        .dir(s"ck_febatch_${qid.incrementAndGet()}").toString)
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
+          org.apache.spark.sql.Row], _: Long) =>
+        batch.write.mode("append").parquet(out)
+      }
+      .start()): Unit
     s.read.parquet(out)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("sum_value"))
@@ -843,13 +848,12 @@ object EventStream {
       .option("rowsPerSecond", "100").option("numPartitions", "2").load()
       .select(col("value"))
     val name = s"graft_rate_${qid.incrementAndGet()}"
-    val q = src.writeStream.outputMode(OutputMode.Append())
+    drain(s)(src.writeStream.outputMode(OutputMode.Append())
       .option("checkpointLocation",
         graft.util.ScratchIndex.dir(s"ck_$name").toString)
       .format("memory").queryName(name)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.processAllAvailable() finally q.stop()
+      .start()): Unit
     drained(s, name).agg(count(lit(1)).as("n_rows"),
       min(col("value")).as("first_value"))
   }
@@ -987,8 +991,8 @@ object EventStream {
         }
     }
     stage(evenHalf, "e")
-    def runOnce(): Unit = {
-      val q = s.readStream
+    def runOnce(): Unit =
+      drain(s)(s.readStream
         .schema("event_id LONG, user_id LONG, event_type STRING, value DOUBLE")
         .option("maxFilesPerTrigger", "1")
         .parquet(landing)
@@ -996,9 +1000,7 @@ object EventStream {
           when(col("value") >= 0, "pos").otherwise("neg"))
         .writeStream.format("parquet")
         .option("path", out).option("checkpointLocation", ck)
-        .outputMode(OutputMode.Append()).start()
-      try q.processAllAvailable() finally q.stop()
-    }
+        .outputMode(OutputMode.Append()).start()): Unit
     runOnce() // consumes the even half, then "crashes" (stop)
     // late arrivals land while no query is running
     stage(oddHalf, "o")
@@ -1386,30 +1388,28 @@ object EventStream {
   }
 
   private def lateDataDropCore(s: SparkSession, dir: String,
-      landing: String): DataFrame =
-    withStreamPartitions(s) {
-      val agg = s.readStream
-        .schema("event_id LONG, event_type STRING, value DOUBLE, ts_us LONG")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(landing)
-        .withColumn("event_time", timestamp_micros(col("ts_us")))
-        .withWatermark("event_time", "1 hour")
-        .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          round(sum(col("value")), 4).as("sum_value"))
-      val name = s"graft_stream_late_${qid.incrementAndGet()}"
-      val q = agg.writeStream.outputMode(OutputMode.Append())
-        .option("checkpointLocation",
-          graft.util.ScratchIndex.dir(s"ck_$name").toString)
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-      lateDropCounts.put(dir, q.recentProgress
-        .flatMap(p => p.stateOperators.map(_.numRowsDroppedByWatermark)).sum)
-      drained(s, name)
-        .select(expr("unix_timestamp(window.start) div 3600").as("bucket"),
-          col("event_type"), col("n_events"), col("sum_value"))
-        .orderBy("bucket", "event_type")
-    }
+      landing: String): DataFrame = {
+    val agg = s.readStream
+      .schema("event_id LONG, event_type STRING, value DOUBLE, ts_us LONG")
+      .option("maxFilesPerTrigger", "1")
+      .parquet(landing)
+      .withColumn("event_time", timestamp_micros(col("ts_us")))
+      .withWatermark("event_time", "1 hour")
+      .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
+      .agg(count(lit(1)).as("n_events"),
+        round(sum(col("value")), 4).as("sum_value"))
+    val name = s"graft_stream_late_${qid.incrementAndGet()}"
+    val q = drain(s)(agg.writeStream.outputMode(OutputMode.Append())
+      .option("checkpointLocation",
+        graft.util.ScratchIndex.dir(s"ck_$name").toString)
+      .format("memory").queryName(name).start())
+    lateDropCounts.put(dir, q.recentProgress
+      .flatMap(p => p.stateOperators.map(_.numRowsDroppedByWatermark)).sum)
+    drained(s, name)
+      .select(expr("unix_timestamp(window.start) div 3600").as("bucket"),
+        col("event_type"), col("n_events"), col("sum_value"))
+      .orderBy("bucket", "event_type")
+  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "stream_ckpt_recovery"   -> (checkpointRecovery _),

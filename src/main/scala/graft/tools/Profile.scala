@@ -3,6 +3,7 @@ package graft.tools
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong, AtomicLongArray}
 import scala.jdk.CollectionConverters._
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -18,8 +19,8 @@ import graft.util.{ScratchIndex, Tables}
   *    twice; one JSON line of min-of-runs seconds, rows, shuffle and
   *    spill MB and peak state rows per query (read by tools/scaling.py,
   *    minmerge.py and addquery.py).
-  *  - `laps <rounds> <query…>`: the named queries timed in order, lap
-  *    by lap; a lap that runs micro-batches also prints its summed
+  *  - `laps <rounds> <query…>`: the named queries timed in order, lap by
+  *    lap, each with its codegen compiles, micro-batches and summed
   *    streaming `durationMs` phases.
   *  - `dumpq <query…>`: each query's full output as single-file CSV
   *    under /tmp/graft_dumpq/<query>, for byte-diffing a restructured
@@ -229,26 +230,26 @@ object Profile {
       s""""n":${ok.size},"sf":"$d"}""")
   }
 
-  /** Mode `laps`: lap by lap, each named query timed in order; a
-    * stream query's lap adds its micro-batch count and summed
-    * `durationMs` phases. One lap of the graph queries in dependency
-    * order splits the family's first-touch cascade by layer, since
-    * each layer memoizes.
+  /** Mode `laps`: lap by lap, each named query timed in order, with
+    * the lap's codegen compiles (a warm lap should add 0), micro-batch
+    * count and summed streaming `durationMs` phases. One lap of the
+    * graph queries in dependency order splits the family's first-touch
+    * cascade by layer, since each layer memoizes.
     */
   private def laps(s: SparkSession, d: String, rounds: Int, names: Seq[String]): Unit = {
     println(s"[profile] pid ${ProcessHandle.current().pid()}")
     val tally = new Tally(s)
     warmUp(s, d)
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     for (lap <- 1 to rounds; name <- names) {
       tally.resetStream()
+      val compiled = compiles
       time(s"$name lap $lap")(graft.SparkEntry.queries(name)(s, d).count())
       tally.settled(): Unit
-      if (tally.batches.get > 0) {
-        println(s"[laps] $name lap $lap: ${tally.batches.get} micro-batches, " +
-          "summed durationMs:")
-        tally.phases.asScala.toSeq.map { case (k, v) => k -> v.get }.sortBy(-_._2)
-          .foreach { case (k, v) => println(f"[laps]   $k%-28s $v%6d ms") }
-      }
+      println(s"[laps] $name lap $lap: ${compiles - compiled} codegen compiles, " +
+        s"${tally.batches.get} micro-batches, summed durationMs:")
+      tally.phases.asScala.toSeq.map { case (k, v) => k -> v.get }.sortBy(-_._2)
+        .foreach { case (k, v) => println(f"[laps]   $k%-28s $v%6d ms") }
     }
   }
 

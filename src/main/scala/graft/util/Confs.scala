@@ -11,8 +11,8 @@ import org.apache.spark.sql.SparkSession
   * hundreds of queries on one `SparkSession`, and a leaked AQE knob
   * silently changes planning for every query that follows — results
   * become order-dependent. `withConfs` snapshots each touched key
-  * with `getOption` before setting it and restores (or unsets, if the
-  * key had no prior value) in a `finally`, so every key it touches is
+  * before setting it and restores (or unsets, if the session had not
+  * set the key) in a `finally`, so every key it touches is
   * guaranteed restored even when the body throws.
   */
 object Confs {
@@ -45,8 +45,8 @@ object Confs {
 
   def withConfs[A](s: SparkSession)(kvs: (String, String)*)(body: => A): A = {
     val conf = s.conf
-    val saved: Seq[(String, Option[String])] =
-      kvs.map { case (k, _) => k -> conf.getOption(k) }
+    // getAll, not getOption: getOption answers a registered key's default
+    val saved = kvs.map { case (k, _) => k -> conf.getAll.get(k) }
     kvs.foreach { case (k, v) => conf.set(k, v) }
     try body
     finally saved.foreach {

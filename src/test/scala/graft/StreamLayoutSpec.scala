@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
@@ -17,6 +18,10 @@ import scala.jdk.CollectionConverters._
   * path: every checkpoint file Spark renames through FileContext asks
   * for its link status, which the stock non-native RawLocalFileSystem
   * answers by forking `readlink` (see graft.util.BareLocalFileSystem).
+  *
+  * The last two cases guard `EventStream.drain`, the one helper every
+  * graft stream starts through: a warm run of a stream reuses the
+  * code the first run compiled, and the drain's confs never leak.
   */
 class StreamLayoutSpec extends SparkTestBase {
 
@@ -164,5 +169,59 @@ class StreamLayoutSpec extends SparkTestBase {
     assert(fields(viaBare) == fields(stock.getFileLinkStatus(lp)))
     assert(viaBare.getSymlink.toUri.getScheme == "file")
     assert(viaBare.getSymlink.toUri.getPath == file.getPath)
+  }
+
+  test("a warm stream run compiles nothing") {
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    // each recompiled on every run through the per-run executor class
+    // loader; the last two also through a per-run GroupState encoder
+    for ((name, query) <- Seq(
+        "stream_tws_totals" -> graft.streaming.EventStream.twsTotals _,
+        "stream_sessionize" -> graft.streaming.EventStream.sessionCounts _,
+        "stream_dedup_minhash" -> graft.streaming.DedupStream.streamingDedup _)) {
+      val first = query(spark, sf).collect()
+      val before = compiles
+      val second = query(spark, sf).collect()
+      val recompiled = compiles - before
+      assert(recompiled == 0, s"the second drain of $name compiled $recompiled classes")
+      assert(second.toSeq == first.toSeq, name)
+    }
+  }
+
+  test("the stream drain restores its confs, also when start() throws") {
+    val parts = "spark.sql.shuffle.partitions"
+    val isolation = "spark.sql.artifact.isolation.enabled"
+    val src = graft.util.ScratchIndex.dir("layout_confs_src").getPath
+    spark.range(0, 10).write.mode("overwrite").parquet(src)
+    val isolationBefore = spark.conf.get(isolation)
+    assert(!spark.conf.getAll.contains(isolation), "precondition: unset")
+    graft.util.Confs.withConfs(spark)(parts -> "7") {
+      var during = Seq.empty[String]
+      def inScope(): Unit = during = Seq(spark.conf.get(parts), spark.conf.get(isolation))
+      def restored(): Unit = {
+        assert(during == Seq("4", "false"))
+        assert(spark.conf.get(parts) == "7")
+        assert(!spark.conf.getAll.contains(isolation))
+        assert(spark.conf.get(isolation) == isolationBefore)
+      }
+      val q = graft.streaming.EventStream.drain(spark) {
+        inScope()
+        spark.readStream.schema("id LONG").parquet(src).writeStream
+          .option("checkpointLocation",
+            graft.util.ScratchIndex.dir("ck_layout_confs").toString)
+          .format("noop").start()
+      }
+      assert(!q.isActive && q.exception.isEmpty)
+      restored()
+
+      during = Nil
+      intercept[IllegalStateException] {
+        graft.streaming.EventStream.drain(spark) {
+          inScope()
+          throw new IllegalStateException("start failed")
+        }
+      }
+      restored()
+    }
   }
 }
