@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.Delta
 import graft.util.Tables._
 
 /** Corpus-curation operators — the composition layer of an LLM
@@ -223,11 +224,10 @@ object Curation {
     * re-reads base text.
     */
   private[graft] def baseContaminationScores(s: SparkSession, d: String,
-      pred: Column = Dedup.deltaDocPred, tag: String = "v1"): DataFrame =
-    graft.util.ScratchIndex.materialize(
-        s, s"contambase_${tag}_${graft.util.ScratchIndex.corpusTag(d)}") {
+      delta: Delta = Delta.Documents): DataFrame =
+    graft.util.ScratchIndex.materialize(s, delta.key("contambase", d)) {
       val docs = shingledDocs(s, d)
-      scoreProbes(docs, docs.filter(col("doc_id") >= 5 && !pred),
+      scoreProbes(docs, delta.base(docs.filter(col("doc_id") >= 5)),
         MaxBenchShingles)
     }
 
@@ -239,24 +239,20 @@ object Curation {
     * yesterday's persisted score table ∪ today's batch scored through
     * the SAME fused-literal kernel ([[scoreProbes]] is shared code),
     * then the global top-50. The only text scan of the update is the
-    * delta's own (`doc_id % 10 == 7` — the Dedup.deltaDocPred
-    * convention, single-sourced); the persisted base relation is
-    * HIT DOCS ONLY (inner-join semantics), orders of magnitude below
-    * the corpus, and is never exchanged — the final TakeOrdered reads
-    * it once. Oracle = the FULL corpus replay (`contaminationSql`),
+    * delta's own ([[Delta.Documents]], `doc_id % 10 == 7`); the
+    * persisted base relation is HIT DOCS ONLY (inner-join semantics),
+    * orders of magnitude below the corpus, and is never exchanged —
+    * the final TakeOrdered reads it once. Oracle = the FULL corpus replay (`contaminationSql`),
     * so the gate hash proves merge ≡ rebuild, the
     * `rel_scd2_incremental` discipline.
     */
-  def contaminationIncremental(s: SparkSession, d: String): DataFrame =
-    contaminationIncrementalWith(s, d, Dedup.deltaDocPred, "v1")
-
-  private[graft] def contaminationIncrementalWith(s: SparkSession,
-      d: String, pred: Column, tag: String): DataFrame = {
+  def contaminationIncremental(s: SparkSession, d: String,
+      delta: Delta = Delta.Documents): DataFrame = {
     val docs = shingledDocs(s, d)
     val deltaScores = scoreProbes(docs,
-      docs.filter(col("doc_id") >= 5 && pred), MaxBenchShingles)
+      delta.batch(docs.filter(col("doc_id") >= 5)), MaxBenchShingles)
     finishContamination(
-      baseContaminationScores(s, d, pred, tag).unionByName(deltaScores))
+      baseContaminationScores(s, d, delta).unionByName(deltaScores))
   }
 
   /** Literal-size cap for the fused contamination path: 500k shingles
@@ -1074,7 +1070,7 @@ object Curation {
     "cur_hash_split"    -> (hashSplit _),
     "cur_lang_mixture"  -> (langMixture _),
     "cur_contamination" -> (contamination _),
-    "cur_contamination_incremental" -> (contaminationIncremental _),
+    "cur_contamination_incremental" -> (contaminationIncremental(_, _)),
     "cur_summary"       -> (curationSummary _),
     "cur_chunk"         -> (chunk _),
     "cur_chunk_agg"     -> (chunkAgg _),

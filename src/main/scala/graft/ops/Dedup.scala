@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.util.LoopScope
+import graft.util.{Delta, LoopScope}
 import graft.util.Tables._
 
 /** Deduplication operators over `documents` — the core of any LLM
@@ -361,24 +361,18 @@ object Dedup {
     * (disjoint) base-base edge set unchanged. DedupTextSpec proves
     * the merged edge relation IS the full rebuild's, row for row —
     * the same oracle discipline as rel_scd2_incremental (incremental
-    * path, full-rebuild truth).
+    * path, full-rebuild truth). The split is [[Delta.Documents]],
+    * shared with the incremental-clustering path so both maintain the
+    * SAME base.
     */
-  /** The standing delta: `doc_id % 10 == 7` stands in for today's
-    * ingest batch; everything else is "yesterday's corpus" whose
-    * index artifacts are persisted. Shared by the incremental-LSH and
-    * incremental-clustering paths so both maintain the SAME base.
-    */
-  private[graft] val deltaDocPred = pmod(col("doc_id"), lit(10)) === 7
-
   /** Yesterday's signature index: (doc_id, sig, sh) for base docs
     * only — memoized; the base text is scanned once per corpus ever.
     */
   private[graft] def baseIndexSigs(s: SparkSession, d: String,
-      pred: Column = deltaDocPred, tag: String = "v1"): DataFrame = {
+      delta: Delta = Delta.Documents): DataFrame = {
     val docs = documents(s, d).select(col("doc_id"), col("text"))
-    graft.util.ScratchIndex.materialize(
-      s, s"minhash_base_${tag}_${graft.util.ScratchIndex.corpusTag(d)}") {
-      minhashSignatures(docs.filter(!pred))
+    graft.util.ScratchIndex.materialize(s, delta.key("minhash_base", d)) {
+      minhashSignatures(delta.base(docs))
         .select(col("doc_id"), col("sig"), shingles(col("text")).as("sh"))
     }
   }
@@ -387,10 +381,9 @@ object Dedup {
     * exact jaccard, unfiltered) — memoized alongside the signatures.
     */
   private[graft] def baseIndexEdges(s: SparkSession, d: String,
-      pred: Column = deltaDocPred, tag: String = "v1"): DataFrame =
-    graft.util.ScratchIndex.materialize(
-      s, s"lshbase_${tag}_${graft.util.ScratchIndex.corpusTag(d)}") {
-      val bands = bandsOf(baseIndexSigs(s, d, pred, tag))
+      delta: Delta = Delta.Documents): DataFrame =
+    graft.util.ScratchIndex.materialize(s, delta.key("lshbase", d)) {
+      val bands = bandsOf(baseIndexSigs(s, d, delta))
       verifyEdges(
         bands.as("x").join(bands.as("y"),
             col("x.band_idx") === col("y.band_idx")
@@ -398,7 +391,7 @@ object Dedup {
               && col("x.doc_id") < col("y.doc_id"))
           .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
           .distinct(),
-        baseIndexSigs(s, d, pred, tag))
+        baseIndexSigs(s, d, delta))
     }
 
   /** Yesterday's band rows (doc_id, band_idx, band_sig — no sig
@@ -408,10 +401,9 @@ object Dedup {
     * relation is bucketed by band_sig so the daily probe co-locates.
     */
   private[graft] def baseIndexBands(s: SparkSession, d: String,
-      pred: Column = deltaDocPred, tag: String = "v1"): DataFrame =
-    graft.util.ScratchIndex.materialize(
-      s, s"lshbasebands_${tag}_${graft.util.ScratchIndex.corpusTag(d)}") {
-      bandsOf(baseIndexSigs(s, d, pred, tag))
+      delta: Delta = Delta.Documents): DataFrame =
+    graft.util.ScratchIndex.materialize(s, delta.key("lshbasebands", d)) {
+      bandsOf(baseIndexSigs(s, d, delta))
         .select(col("doc_id"), col("band_idx"), col("band_sig"))
     }
 
@@ -423,24 +415,23 @@ object Dedup {
     * mining work is O(delta probes), never O(corpus²).
     */
   private[graft] def deltaVerifiedEdges(s: SparkSession, d: String,
-      pred: Column = deltaDocPred, tag: String = "v1",
-      bcastDelta: Boolean = false): DataFrame = {
+      delta: Delta = Delta.Documents): DataFrame = {
     val docs = documents(s, d).select(col("doc_id"), col("text"))
-    val baseSigs = baseIndexSigs(s, d, pred, tag)
-    val deltaSigs = minhashSignatures(docs.filter(pred))
+    val baseSigs = baseIndexSigs(s, d, delta)
+    val deltaSigs = minhashSignatures(delta.batch(docs))
       .select(col("doc_id"), col("sig"), shingles(col("text")).as("sh"))
     val allSigs = baseSigs.unionByName(deltaSigs)
     val deltaBands = bandsOf(deltaSigs)
       .select(col("doc_id"), col("band_idx"), col("band_sig"))
-    val allBands = baseIndexBands(s, d, pred, tag).unionByName(deltaBands)
-    // bcastDelta (the constant-sized-delta control, VERDICT r16 #4):
-    // a real daily batch's band rows are broadcast-sized, and with
-    // them broadcast the persisted band index streams through the
+    val allBands = baseIndexBands(s, d, delta).unionByName(deltaBands)
+    // a broadcast delta (the constant-sized-delta control, VERDICT
+    // r16 #4): a real daily batch's band rows are broadcast-sized, and
+    // with them broadcast the persisted band index streams through the
     // probe with NO exchange — the registered 10%-fraction fixture
     // keeps the planner's choice (its delta is corpus-fraction-sized,
-    // the degreeIncrementalWith adjudication)
+    // the degreeIncremental adjudication)
     val probeSide =
-      if (bcastDelta) broadcast(deltaBands.as("y")) else deltaBands.as("y")
+      if (delta.broadcast) broadcast(deltaBands.as("y")) else deltaBands.as("y")
     val touching = allBands.as("x")
       .join(probeSide,
         col("x.band_idx") === col("y.band_idx")
@@ -450,13 +441,14 @@ object Dedup {
         greatest(col("x.doc_id"), col("y.doc_id")).as("b_id"))
       .distinct()
     verifyEdges(
-      if (bcastDelta) broadcast(touching) else touching, allSigs,
-      bcastCand = bcastDelta)
+      if (delta.broadcast) broadcast(touching) else touching, allSigs,
+      bcastCand = delta.broadcast)
   }
 
-  private[graft] def incrementalEdges(s: SparkSession, d: String): DataFrame =
+  private[graft] def incrementalEdges(s: SparkSession, d: String,
+      delta: Delta = Delta.Documents): DataFrame =
     // base-base edges never touch the delta; the union is disjoint
-    deltaVerifiedEdges(s, d).unionByName(baseIndexEdges(s, d))
+    deltaVerifiedEdges(s, d, delta).unionByName(baseIndexEdges(s, d, delta))
 
   /** Verified near-dup pairs at exact-Jaccard ≥ 0.7 served from the
     * incrementally-maintained index. Same full hash oracle as
@@ -787,7 +779,7 @@ object Dedup {
       bcastDelta: Boolean = false): DataFrame = {
     // project through L: endpoints fall back to themselves when
     // unlabeled (delta docs, or base docs that were singletons).
-    // bcastDelta (const-delta control): prune the persisted labeling
+    // bcastDelta (a broadcast Delta): prune the persisted labeling
     // to the delta's own endpoint set first (one broadcast-semi
     // scan-only pass) and broadcast the bounded result, so the label
     // table is never exchanged for a daily-batch-sized delta
@@ -830,39 +822,31 @@ object Dedup {
     * yesterday's output — a real pipeline reads it, never rebuilds).
     */
   private[graft] def baseClusterLabels(s: SparkSession, d: String,
-      pred: Column = deltaDocPred, tag: String = "v1"): DataFrame =
+      delta: Delta = Delta.Documents): DataFrame =
     LoopScope.scoped { sc =>
-      graft.util.ScratchIndex.materialize(
-          s, s"dedupclustbase_${tag}_${graft.util.ScratchIndex.corpusTag(d)}") {
-        val pairs = baseIndexEdges(s, d, pred, tag)
+      graft.util.ScratchIndex.materialize(s, delta.key("dedupclustbase", d)) {
+        val pairs = baseIndexEdges(s, d, delta)
           .filter(col("jaccard") >= 0.5)
           .select(col("a_id"), col("b_id"))
         contractComponents(sc, symmetric(pairs)).labels
       }
     }
 
-  def dedupClustersIncremental(s: SparkSession, d: String): DataFrame =
-    dedupClustersIncrementalWith(s, d, deltaDocPred, "v1",
-      bcastDelta = false)
-
-  /** The update path, parameterized for the constant-sized-delta
-    * control (tools.Profile `incclustersconst`) — the
-    * `degreeIncrementalWith` convention: the registered fixture's
-    * 10% delta keeps the planner's join choices; a daily-batch-sized
-    * delta broadcasts every delta-derived relation so no probe ever
-    * exchanges a persisted artifact.
+  /** The update path. The constant-sized-delta control (tools.Profile
+    * `incclustersconst`) passes a broadcast [[Delta]]: the registered
+    * fixture's 10% delta keeps the planner's join choices; a
+    * daily-batch-sized delta broadcasts every delta-derived relation
+    * so no probe ever exchanges a persisted artifact.
     */
-  private[graft] def dedupClustersIncrementalWith(s: SparkSession,
-      d: String, pred: Column, tag: String, bcastDelta: Boolean)
-      : DataFrame =
+  def dedupClustersIncremental(s: SparkSession, d: String,
+      delta: Delta = Delta.Documents): DataFrame =
     LoopScope.scoped { sc =>
-      graft.util.ScratchIndex.materialize(
-          s, s"dedupclustinc_${tag}_${graft.util.ScratchIndex.corpusTag(d)}") {
-        val eDelta = deltaVerifiedEdges(s, d, pred, tag, bcastDelta)
+      graft.util.ScratchIndex.materialize(s, delta.key("dedupclustinc", d)) {
+        val eDelta = deltaVerifiedEdges(s, d, delta)
           .filter(col("jaccard") >= 0.5)
           .select(col("a_id"), col("b_id"))
-        mergeIncrementalLabels(sc, baseClusterLabels(s, d, pred, tag),
-          eDelta, documents(s, d).select(col("doc_id")), bcastDelta)
+        mergeIncrementalLabels(sc, baseClusterLabels(s, d, delta),
+          eDelta, documents(s, d).select(col("doc_id")), delta.broadcast)
       }
     }.orderBy("doc_id")
 
@@ -981,7 +965,7 @@ object Dedup {
     "dedup_containment" -> (containmentPairs _),
     "dedup_minhash_lsh" -> (minhashLsh _),
     "dedup_lsh_incremental" -> (minhashLshIncremental _),
-    "dedup_clusters_incremental" -> (dedupClustersIncremental _),
+    "dedup_clusters_incremental" -> (dedupClustersIncremental(_, _)),
     "dedup_simhash"     -> (simhash _),
   )
 

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.util.LoopScope
+import graft.util.{Delta, LoopScope}
 import graft.util.Tables._
 
 /** Graph analytics over relations (no GraphX dependency — the
@@ -754,14 +754,6 @@ object Graph {
       |       CAST(sum(d_total) // 2 AS BIGINT) AS m
       |FROM per""".stripMargin
 
-  /** The standing graph delta: lineitem rows of orders with
-    * `l_orderkey % 10 == 7` stand in for today's ingest batch (the
-    * `Dedup.deltaDocPred` convention); everything else is
-    * "yesterday's graph", whose edge and degree artifacts are
-    * persisted.
-    */
-  private val deltaOrderPred = pmod(col("l_orderkey"), lit(10)) === 7
-
   /** Cap on the class-2 delta-vertex prune broadcast (longs): 4M ≈
     * 32 MB shipped, inside the measured-good range (the sf10 fixture
     * broadcasts ~2M). Above it the semi-joins go unhinted — a
@@ -809,10 +801,10 @@ object Graph {
 
   /** Yesterday's edge relation (base orders only) — memoized; the
     * base lineitem is scanned for graph building once per corpus.
-    * `pred`/`tag` parameterize the base/delta split so the
+    * The [[Delta]] parameterizes the base/delta split so the
     * constant-sized-delta CONTROL (tools.Profile `incdegreeconst`,
     * VERDICT r15 #6) runs the same artifacts against a delta that
-    * does not grow with the corpus; defaults are the registered
+    * does not grow with the corpus; the default is the registered
     * query's fixture split with its original memo keys.
     *
     * CLUSTERED layout: range-partitioned and sorted by (p1, p2), so
@@ -825,17 +817,18 @@ object Graph {
     * batch's key footprint.
     */
   private[graft] def baseGraphEdges(s: SparkSession, d: String,
-      pred: Column = deltaOrderPred, tag: String = "v1"): DataFrame =
+      delta: Delta = Delta.Lineitem): DataFrame =
     graft.util.ScratchIndex.materialize(
         // "edgesbase2": the literal bumps with the BUILD RECIPE (the
         // r16 clustering changed the artifact's physical layout
         // without a bump — safe only because scratch is pid-scoped;
         // ADVICE r16). The key must embed everything that determines
         // the bytes, so a future shared-scratch mode can never alias
-        // a stale unsorted artifact. `tag` identifies the SPLIT
-        // (registered fixture vs const-delta control), not the recipe.
-        s, s"edgesbase2_${tag}_${graft.util.ScratchIndex.corpusTag(d)}") {
-      pairsOf(lineitem(s, d).filter(!pred)
+        // a stale unsorted artifact. The delta's tag identifies the
+        // SPLIT (registered fixture vs const-delta control), not the
+        // recipe.
+        s, delta.key("edgesbase2", d)) {
+      pairsOf(delta.base(lineitem(s, d))
         .select(col("l_orderkey"), col("l_partkey")))
         .repartitionByRange(col("p1"), col("p2"))
         .sortWithinPartitions("p1", "p2")
@@ -879,12 +872,21 @@ object Graph {
     case None => base.filter(lit(false))
   }
 
+  /** The dup-probe build side. The REGISTERED query keeps shuffle-hash
+    * because its fixture delta is 10% of the corpus (4M pairs at sf10,
+    * past profitable broadcast size — the r15 adjudication), but a real
+    * constant-sized daily batch IS broadcast-sized ([[Delta.broadcast]]),
+    * and with the delta broadcast the base-edge side has NO exchange at
+    * all: the probe is one scan-only pass.
+    */
+  private def hinted(delta: Delta, df: DataFrame): DataFrame =
+    if (delta.broadcast) broadcast(df) else df.hint("shuffle_hash")
+
   /** Yesterday's degree table, persisted beside the base edges. */
   private[graft] def baseGraphDegrees(s: SparkSession, d: String,
-      pred: Column = deltaOrderPred, tag: String = "v1"): DataFrame =
-    graft.util.ScratchIndex.materialize(
-        s, s"degbase_${tag}_${graft.util.ScratchIndex.corpusTag(d)}") {
-      degreesOf(baseGraphEdges(s, d, pred, tag))
+      delta: Delta = Delta.Lineitem): DataFrame =
+    graft.util.ScratchIndex.materialize(s, delta.key("degbase", d)) {
+      degreesOf(baseGraphEdges(s, d, delta))
     }
 
   /** Today's pair batch, memoized beside the base artifacts (the
@@ -893,10 +895,9 @@ object Graph {
     * once, read back columnar thereafter).
     */
   private[graft] def deltaGraphPairs(s: SparkSession, d: String,
-      pred: Column = deltaOrderPred, tag: String = "v1"): DataFrame =
-    graft.util.ScratchIndex.materialize(
-        s, s"deltapairs_${tag}_${graft.util.ScratchIndex.corpusTag(d)}") {
-      pairsOf(lineitem(s, d).filter(pred)
+      delta: Delta = Delta.Lineitem): DataFrame =
+    graft.util.ScratchIndex.materialize(s, delta.key("deltapairs", d)) {
+      pairsOf(delta.batch(lineitem(s, d))
         .select(col("l_orderkey"), col("l_partkey")))
     }
 
@@ -965,29 +966,16 @@ object Graph {
     * (`dedup_clusters_incremental`) are the graph artifacts whose
     * update cost is delta-local.
     */
-  def degreeIncremental(s: SparkSession, d: String): DataFrame =
-    degreeIncrementalWith(s, d, deltaOrderPred, "v1", bcastDelta = false)
-
-  /** The update path, parameterized for the constant-sized-delta
-    * control: `bcastDelta` picks the dup-probe shape — the REGISTERED
-    * query keeps shuffle-hash because its fixture delta is 10% of the
-    * corpus (4M pairs at sf10, past profitable broadcast size — the
-    * r15 adjudication), but a real constant-sized daily batch IS
-    * broadcast-sized, and with the delta broadcast the base-edge side
-    * has NO exchange at all: the probe is one scan-only pass.
-    */
-  private[graft] def degreeIncrementalWith(s: SparkSession, d: String,
-      pred: Column, tag: String, bcastDelta: Boolean): DataFrame = {
-    val deltaPairs = deltaGraphPairs(s, d, pred, tag)
+  def degreeIncremental(s: SparkSession, d: String,
+      delta: Delta = Delta.Lineitem): DataFrame = {
+    val deltaPairs = deltaGraphPairs(s, d, delta)
     // delta pairs already present in the base: ONE probe pass over
     // the persisted base edges (output ≤ |delta|), pruned to the
     // batch's key envelope so the range-sorted layout skips row
     // groups outside the batch's footprint
-    val hinted = if (bcastDelta) broadcast(deltaPairs)
-      else deltaPairs.hint("shuffle_hash")
-    val dup = pruneEdges(baseGraphEdges(s, d, pred, tag),
+    val dup = pruneEdges(baseGraphEdges(s, d, delta),
         keyEnvelope(deltaPairs))
-      .join(hinted, Seq("p1", "p2"), "left_semi")
+      .join(hinted(delta, deltaPairs), Seq("p1", "p2"), "left_semi")
     val inc = degreesOf(deltaPairs)
       .select(col("v"), col("degree").as("d_over"))
       .join(degreesOf(dup).select(col("v"), col("degree").as("d_dup")),
@@ -995,7 +983,7 @@ object Graph {
       .select(col("v"),
         (col("d_over") - coalesce(col("d_dup"), lit(0L))).as("degree"))
       .filter(col("degree") > 0L)
-    baseGraphDegrees(s, d, pred, tag).unionAll(inc)
+    baseGraphDegrees(s, d, delta).unionAll(inc)
       .groupBy(col("v")).agg(sum(col("degree")).as("degree"))
       .orderBy("v")
   }
@@ -1026,10 +1014,9 @@ object Graph {
     * shortcut.
     */
   private[graft] def baseGraphAdjacency(s: SparkSession, d: String,
-      pred: Column = deltaOrderPred, tag: String = "v1"): DataFrame =
-    graft.util.ScratchIndex.materialize(
-        s, s"adjbase_${tag}_${graft.util.ScratchIndex.corpusTag(d)}") {
-      val e = baseGraphEdges(s, d, pred, tag)
+      delta: Delta = Delta.Lineitem): DataFrame =
+    graft.util.ScratchIndex.materialize(s, delta.key("adjbase", d)) {
+      val e = baseGraphEdges(s, d, delta)
       symmetric(e, "v", "u")
         .groupBy(col("v"))
         .agg(sort_array(collect_list(col("u"))).as("nbrs"))
@@ -1045,10 +1032,9 @@ object Graph {
     * base pair self-join again.
     */
   private[graft] def baseTriangleStats(s: SparkSession, d: String,
-      pred: Column = deltaOrderPred, tag: String = "v1"): DataFrame =
-    graft.util.ScratchIndex.materialize(
-        s, s"tribase_${tag}_${graft.util.ScratchIndex.corpusTag(d)}") {
-      val e = baseGraphEdges(s, d, pred, tag)
+      delta: Delta = Delta.Lineitem): DataFrame =
+    graft.util.ScratchIndex.materialize(s, delta.key("tribase", d)) {
+      val e = baseGraphEdges(s, d, delta)
       val adj = e.groupBy(col("p1").as("v"))
         .agg(sort_array(collect_list(col("p2"))).as("nbrs"))
       val tri = e
@@ -1070,10 +1056,9 @@ object Graph {
     * full-edge distinct.
     */
   private[graft] def baseP1Vertices(s: SparkSession, d: String,
-      pred: Column = deltaOrderPred, tag: String = "v1"): DataFrame =
-    graft.util.ScratchIndex.materialize(
-        s, s"p1base_${tag}_${graft.util.ScratchIndex.corpusTag(d)}") {
-      baseGraphEdges(s, d, pred, tag).select(col("p1")).distinct()
+      delta: Delta = Delta.Lineitem): DataFrame =
+    graft.util.ScratchIndex.materialize(s, delta.key("p1base", d)) {
+      baseGraphEdges(s, d, delta).select(col("p1")).distinct()
     }
 
   /** Truly-new delta edges D = (delta-mined pairs) ∖ (base edges) —
@@ -1084,16 +1069,12 @@ object Graph {
     * consume it.
     */
   private[graft] def freshDeltaEdges(s: SparkSession, d: String,
-      pred: Column = deltaOrderPred, tag: String = "v1",
-      bcastDelta: Boolean = false): DataFrame =
-    graft.util.ScratchIndex.materialize(
-        s, s"deltafresh_${tag}_${graft.util.ScratchIndex.corpusTag(d)}") {
-      val deltaAll = deltaGraphPairs(s, d, pred, tag)
-      val hinted = if (bcastDelta) broadcast(deltaAll)
-        else deltaAll.hint("shuffle_hash")
-      val dup = pruneEdges(baseGraphEdges(s, d, pred, tag),
+      delta: Delta = Delta.Lineitem): DataFrame =
+    graft.util.ScratchIndex.materialize(s, delta.key("deltafresh", d)) {
+      val deltaAll = deltaGraphPairs(s, d, delta)
+      val dup = pruneEdges(baseGraphEdges(s, d, delta),
           keyEnvelope(deltaAll))
-        .join(hinted, Seq("p1", "p2"), "left_semi")
+        .join(hinted(delta, deltaAll), Seq("p1", "p2"), "left_semi")
       deltaAll.join(dup, Seq("p1", "p2"), "left_anti")
     }
 
@@ -1144,9 +1125,9 @@ object Graph {
     * full-corpus pair self-join + distinct — the rebuild's dominant
     * cost.
     */
-  def trianglesIncremental(s: SparkSession, d: String): DataFrame =
-    trianglesIncrementalParts(s, d, deltaOrderPred, "v1",
-        bcastDelta = false)
+  def trianglesIncremental(s: SparkSession, d: String,
+      delta: Delta = Delta.Lineitem): DataFrame =
+    trianglesIncrementalParts(s, d, delta)
       .select(col("n_triangles"), col("n_edges"),
         col("n_left_vertices"), col("max_vertex"))
 
@@ -1156,11 +1137,8 @@ object Graph {
     * schema.
     */
   private[graft] def trianglesIncrementalParts(s: SparkSession,
-      d: String, pred: Column, tag: String,
-      bcastDelta: Boolean): DataFrame = {
-    val fresh = freshDeltaEdges(s, d, pred, tag, bcastDelta)
-    def hinted(df: DataFrame): DataFrame =
-      if (bcastDelta) broadcast(df) else df.hint("shuffle_hash")
+      d: String, delta: Delta): DataFrame = {
+    val fresh = freshDeltaEdges(s, d, delta)
     // the batch's key envelope, once: every base-artifact probe below
     // pre-filters by it so the range-sorted layouts skip row groups
     // outside the batch's footprint (pure pruning — see keyEnvelope)
@@ -1169,7 +1147,7 @@ object Graph {
       adj.filter(col("v").between(lo, hi))
 
     // class 1: delta edge, two base edges — probe the base adjacency
-    val adj = baseGraphAdjacency(s, d, pred, tag)
+    val adj = baseGraphAdjacency(s, d, delta)
     val adjA = env.fold(adj.filter(lit(false))) {
       case (l1, h1, _, _) => pruneV(adj, l1, h1) }
     val adjB = env.fold(adj.filter(lit(false))) {
@@ -1179,7 +1157,7 @@ object Graph {
     // shuffle-hash build map of array payloads cannot spill (measured
     // SparkOutOfMemoryError at the sf10 fixture; sort-merge spills
     // gracefully and AQE still picks hash when the pruned side fits)
-    val t1 = hinted(fresh)
+    val t1 = hinted(delta, fresh)
       .join(adjA.select(col("v").as("va"), col("nbrs").as("na")),
         col("p1") === col("va")).drop("va")
       .join(adjB.select(col("v").as("vb"), col("nbrs").as("nb")),
@@ -1220,8 +1198,8 @@ object Graph {
     val vEnv = env.map { case (l1, h1, l2, h2) =>
       (math.min(l1, l2), math.max(h1, h2)) }
     val basePruned = vEnv.fold(
-        baseGraphEdges(s, d, pred, tag).filter(lit(false))) {
-      case (vl, vh) => baseGraphEdges(s, d, pred, tag)
+        baseGraphEdges(s, d, delta).filter(lit(false))) {
+      case (vl, vh) => baseGraphEdges(s, d, delta)
         .filter(col("p1").between(vl, vh) && col("p2").between(vl, vh))
     }
     val baseCand = basePruned
@@ -1253,11 +1231,11 @@ object Graph {
     // |V|-bounded distinct-p1 union
     val deltaStats = fresh.agg(count(lit(1)).as("edges_d"),
       max(col("p2")).as("maxp2_d"))
-    val nLeft = baseP1Vertices(s, d, pred, tag)
+    val nLeft = baseP1Vertices(s, d, delta)
       .unionAll(fresh.select(col("p1")))
       .agg(countDistinct(col("p1")).as("n_left_vertices"))
 
-    baseTriangleStats(s, d, pred, tag)
+    baseTriangleStats(s, d, delta)
       .crossJoin(t1).crossJoin(t2).crossJoin(t3)
       .crossJoin(deltaStats).crossJoin(nLeft)
       .select(
@@ -1406,8 +1384,8 @@ object Graph {
     "graph_kcore"      -> (kcorePeel _),
     "graph_modularity" -> (modularity _),
     "graph_modularity_q" -> (modularityQ _),
-    "graph_degree_incremental" -> (degreeIncremental _),
-    "graph_triangles_incremental" -> (trianglesIncremental _),
+    "graph_degree_incremental" -> (degreeIncremental(_, _)),
+    "graph_triangles_incremental" -> (trianglesIncremental(_, _)),
   )
 
   val oracle: Map[String, String] = Map(

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.util.Delta
 import graft.util.Tables._
 
 /** Third relational batch — the remaining standard-taxonomy surface:
@@ -688,16 +689,6 @@ object Relational3 {
       |             ROWS BETWEEN 5 PRECEDING AND CURRENT ROW)
       |ORDER BY l_returnflag, l_orderkey, l_linenumber""".stripMargin
 
-  /** The standing orders delta: everything from 1999-01-01 on stands
-    * in for today's ingest batch (a TIME-SUFFIX split — see the
-    * append contract on [[scd2IncrementalWith]]); everything before
-    * it is "yesterday's" history whose derived artifacts are
-    * persisted. Shared by the SCD2 and aggregate-state incremental
-    * paths so both maintain the same base.
-    */
-  private[graft] val ordersDeltaPred =
-    col("o_orderdate") >= lit("1999-01-01").cast("timestamp")
-
   /** Yesterday's converged dimension — the SCD2 output over the base
     * (pre-cutoff) history, persisted once per corpus (a real pipeline
     * reads yesterday's dimension table; it never re-derives it from
@@ -706,10 +697,23 @@ object Relational3 {
     * patch pass streams in key order.
     */
   private[graft] def baseScd2Table(s: SparkSession, d: String,
-      pred: Column = ordersDeltaPred, tag: String = "v1"): DataFrame =
-    graft.util.ScratchIndex.materialize(
-        s, s"scd2base_${tag}_${graft.util.ScratchIndex.corpusTag(d)}") {
-      scd2Of(orders(s, d).filter(!pred))
+      delta: Delta = Delta.Orders): DataFrame =
+    graft.util.ScratchIndex.materialize(s, delta.key("scd2base", d)) {
+      scd2Of(delta.base(orders(s, d)))
+    }
+
+  /** Today's order batch, memoized beside the base artifacts (the
+    * `deltaGraphPairs` precedent: the delta extraction is
+    * deterministic per corpus and MORE THAN ONE branch of the update
+    * consumes it — without the memo each consumer re-scans the whole
+    * history for its own copy of the filter).
+    */
+  private[graft] def deltaOrdersTable(s: SparkSession, d: String,
+      delta: Delta): DataFrame =
+    graft.util.ScratchIndex.materialize(s, delta.key("scd2delta", d)) {
+      delta.batch(orders(s, d))
+        .select(col("o_custkey"), col("o_orderstatus"), col("o_orderdate"),
+          col("o_orderkey"))
     }
 
   /** INCREMENTAL SCD2 maintenance — yesterday's PERSISTED dimension +
@@ -732,46 +736,20 @@ object Relational3 {
     * `graph_degree_incremental` "|V|-sized merged output" argument).
     * No exchange touches the dimension anywhere.
     *
-    * APPEND CONTRACT: the split predicate must be a TIME SUFFIX per
-    * customer (every delta order dated at-or-after every base order of
-    * its customer) — the definition of an ingest batch. Under it the
-    * seed status is exact: a customer's last base ORDER carries the
-    * same status as their last base CHANGE row (status is constant
-    * between change rows), which is the persisted current row's
-    * status. A mid-history backfill violates the contract and needs
-    * the rewrite-affected-customers form instead (git history has it).
+    * The split must keep the append contract on [[Delta.Orders]]: a
+    * TIME SUFFIX per customer, under which the seed status is exact.
+    * The constant-sized-delta control (tools.Profile `incscd2const`)
+    * passes its own [[Delta]].
     *
     * The ORACLE is the FULL REBUILD (same SQL as rel_scd2): hash
     * equality proves append-merge ≡ batch rebuild exactly — versions,
     * interval bounds and current flags all reproduced.
     */
-  def scd2Incremental(s: SparkSession, d: String): DataFrame =
-    scd2IncrementalWith(s, d, ordersDeltaPred, "v1")
-
-  /** The update path, parameterized (`pred`/`tag`) for the
-    * constant-sized-delta control (tools.Profile `incscd2const`) —
-    * the `degreeIncrementalWith` convention.
-    */
-  /** Today's order batch, memoized beside the base artifacts (the
-    * `deltaGraphPairs` precedent: the delta extraction is
-    * deterministic per corpus and MORE THAN ONE branch of the update
-    * consumes it — without the memo each consumer re-scans the whole
-    * history for its own copy of the filter).
-    */
-  private[graft] def deltaOrdersTable(s: SparkSession, d: String,
-      pred: Column, tag: String): DataFrame =
-    graft.util.ScratchIndex.materialize(
-        s, s"scd2delta_${tag}_${graft.util.ScratchIndex.corpusTag(d)}") {
-      orders(s, d).filter(pred)
-        .select(col("o_custkey"), col("o_orderstatus"), col("o_orderdate"),
-          col("o_orderkey"))
-    }
-
-  private[graft] def scd2IncrementalWith(s: SparkSession, d: String,
-      pred: Column, tag: String): DataFrame = {
-    val base = baseScd2Table(s, d, pred, tag)
-    val delta = deltaOrdersTable(s, d, pred, tag)
-    val affected = delta.select(col("o_custkey")).distinct()
+  def scd2Incremental(s: SparkSession, d: String,
+      delta: Delta = Delta.Orders): DataFrame = {
+    val base = baseScd2Table(s, d, delta)
+    val batch = deltaOrdersTable(s, d, delta)
+    val affected = batch.select(col("o_custkey")).distinct()
     // yesterday's current row per affected customer: one scan-only
     // pass over the persisted dimension, semi-joined against the
     // batch's bounded key set
@@ -785,7 +763,7 @@ object Relational3 {
     // delta change mining, seeded with the current status (exact under
     // the append contract — see the scaladoc); new customers seed null
     // and their first row is always a change
-    val dchanges = delta
+    val dchanges = batch
       .join(broadcast(curAff), Seq("o_custkey"), "left_outer")
       .withColumn("prev_status",
         coalesce(lag(col("o_orderstatus"), 1).over(w), col("cur_status")))
@@ -855,22 +833,29 @@ object Relational3 {
     * state it wrote yesterday.
     */
   private[graft] def baseAggState(s: SparkSession, d: String,
-      pred: Column = ordersDeltaPred, tag: String = "v1"): DataFrame =
-    graft.util.ScratchIndex.materialize(
-        s, s"aggstate_${tag}_${graft.util.ScratchIndex.corpusTag(d)}") {
-      aggStateOf(orders(s, d).filter(!pred))
+      delta: Delta = Delta.Orders): DataFrame =
+    graft.util.ScratchIndex.materialize(s, delta.key("aggstate", d)) {
+      aggStateOf(delta.base(orders(s, d)))
         .repartitionByRange(col("o_custkey"))
         .sortWithinPartitions("o_custkey")
     }
 
-  def aggIncremental(s: SparkSession, d: String): DataFrame =
-    aggIncrementalWith(s, d, ordersDeltaPred, "v1", bcastDelta = false)
+  /** Today's delta STATE, memoized (the `deltaGraphPairs` precedent):
+    * three branches of the merge consume it (patch build, touched-key
+    * probe, new-customer anti), and without the memo each one re-ran
+    * the history scan + aggregation — measured +50% on the whole
+    * update at the sf10 fraction fixture.
+    */
+  private[graft] def deltaAggState(s: SparkSession, d: String,
+      delta: Delta): DataFrame =
+    graft.util.ScratchIndex.materialize(s, delta.key("aggdelta", d)) {
+      aggStateOf(delta.batch(orders(s, d)))
+    }
 
-  /** The update path, parameterized for the constant-sized-delta
-    * control. `bcastDelta` picks the patch-join shape, exactly the
-    * `degreeIncrementalWith` adjudication: the REGISTERED fixture's
-    * delta is a ~40% fraction of the MV (every decade, by the date
-    * cutoff's construction), past profitable broadcast size, so it
+  /** The update path. [[Delta.broadcast]] picks the patch-join shape,
+    * exactly the `degreeIncremental` adjudication: the REGISTERED
+    * fixture's delta is a ~40% fraction of the MV (every decade, by the
+    * date cutoff's construction), past profitable broadcast size, so it
     * keeps a shuffle-hash patch join (ONE exchange of the MV state —
     * which on a lake layout bucketed by key disappears); a real
     * constant-sized daily batch IS broadcast-sized, and with the
@@ -881,25 +866,12 @@ object Relational3 {
     * touched (itself one broadcast-semi scan of the state), so no
     * branch ever builds a map from the MV side.
     */
-  /** Today's delta STATE, memoized (the `deltaGraphPairs` precedent):
-    * three branches of the merge consume it (patch build, touched-key
-    * probe, new-customer anti), and without the memo each one re-ran
-    * the history scan + aggregation — measured +50% on the whole
-    * update at the sf10 fraction fixture.
-    */
-  private[graft] def deltaAggState(s: SparkSession, d: String,
-      pred: Column, tag: String): DataFrame =
-    graft.util.ScratchIndex.materialize(
-        s, s"aggdelta_${tag}_${graft.util.ScratchIndex.corpusTag(d)}") {
-      aggStateOf(orders(s, d).filter(pred))
-    }
-
-  private[graft] def aggIncrementalWith(s: SparkSession, d: String,
-      pred: Column, tag: String, bcastDelta: Boolean): DataFrame = {
-    val base = baseAggState(s, d, pred, tag)
-    val delta = deltaAggState(s, d, pred, tag)
-    val hinted = if (bcastDelta) broadcast(delta)
-      else delta.hint("shuffle_hash")
+  def aggIncremental(s: SparkSession, d: String,
+      delta: Delta = Delta.Orders): DataFrame = {
+    val base = baseAggState(s, d, delta)
+    val batch = deltaAggState(s, d, delta)
+    val hinted = if (delta.broadcast) broadcast(batch)
+      else batch.hint("shuffle_hash")
     val patched = base.as("b")
       .join(hinted.as("dl"), Seq("o_custkey"), "left_outer")
       .select(col("o_custkey"),
@@ -916,9 +888,9 @@ object Relational3 {
       // "measurement" times a plain state scan
       .filter(col("n_orders") >= 0L)
     val touchedBaseKeys = base.select(col("o_custkey"))
-      .join(broadcast(delta.select(col("o_custkey"))),
+      .join(broadcast(batch.select(col("o_custkey"))),
         Seq("o_custkey"), "left_semi")
-    val newbies = delta
+    val newbies = batch
       .join(broadcast(touchedBaseKeys), Seq("o_custkey"), "left_anti")
       .select(col("o_custkey"), col("n_orders"),
         (col("cents") / 100.0).as("total_spend"), col("last_order"))
@@ -1175,8 +1147,8 @@ object Relational3 {
     "rel_null_safe_join" -> (nullSafeJoin _),
     "rel_grouping_sets" -> (groupingSets _),
     "rel_percentile_disc" -> (percentileDisc _),
-    "rel_scd2_incremental" -> (scd2Incremental _),
-    "rel_agg_incremental"  -> (aggIncremental _),
+    "rel_scd2_incremental" -> (scd2Incremental(_, _)),
+    "rel_agg_incremental"  -> (aggIncremental(_, _)),
     "rel_observe_metrics"  -> (observeMetrics _),
     "rel_rolling_median" -> (rollingMedian _),
     "rel_scd2"        -> (scd2 _),

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.util.Delta
 import graft.util.Tables._
 
 /** Similarity search over the `embeddings` table
@@ -359,9 +360,9 @@ object Similarity {
     * same centroids — IncrementalIvfSpec proves postings row-for-row
     * and answers row-for-row (incremental path, rebuild truth: the
     * rel_scd2_incremental / dedup_lsh_incremental discipline), and
-    * pins query recall vs exact brute force. The delta convention
-    * (`vec_id % 10 == 7`) mirrors Dedup.deltaDocPred so the whole
-    * repo's "today's batch" is one shape.
+    * pins query recall vs exact brute force. The split is
+    * [[Delta.Embeddings]] (`vec_id % 10 == 7`), the same shape as
+    * every other path's "today's batch".
     *
     * What the daily path avoids growing with history: Lloyd training
     * (iters × corpus passes + k×dim driver agg) and the full-corpus
@@ -372,8 +373,6 @@ object Similarity {
     * probe set, not the corpus (measured flat across 100× in
     * SCALING.md).
     */
-  private[graft] val deltaVecPred = pmod(col("vec_id"), lit(10)) === 7
-
   private[graft] def embRelation(s: SparkSession, d: String): DataFrame =
     embeddings(s, d)
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
@@ -382,9 +381,9 @@ object Similarity {
     * under a key disjoint from the full-corpus quantizer's.
     */
   private[graft] def baseIvfCentroids(s: SparkSession, d: String,
-      pred: Column = deltaVecPred, tag: String = "v1"): Array[Array[Double]] =
-    centroidMemo.getOrElseUpdate(s"$d#base$tag",
-      trainIvfCentroids(embRelation(s, d).filter(!pred)))
+      delta: Delta = Delta.Embeddings): Array[Array[Double]] =
+    centroidMemo.getOrElseUpdate(delta.key("ivfcentbase", d),
+      trainIvfCentroids(delta.base(embRelation(s, d))))
 
   /** Yesterday's posting lists (vec_id, v, cent_id), persisted once
     * per corpus — the index table a real pipeline reads, never
@@ -400,11 +399,11 @@ object Similarity {
     * partition filter reaches this scan).
     */
   private[graft] def baseIvfPostingsPath(s: SparkSession, d: String,
-      pred: Column = deltaVecPred, tag: String = "v1"): String =
+      delta: Delta = Delta.Embeddings): String =
     graft.util.ScratchIndex.materializePath(
-      s, s"ivfbase_v3_${tag}_${graft.util.ScratchIndex.corpusTag(d)}") { tmp =>
-      embRelation(s, d).filter(!pred)
-        .withColumn("cent_id", bestCentroid(baseIvfCentroids(s, d, pred, tag)))
+      s, delta.key("ivfbase_v3", d)) { tmp =>
+      delta.base(embRelation(s, d))
+        .withColumn("cent_id", bestCentroid(baseIvfCentroids(s, d, delta)))
         // the cell id rides in the FILES too (`cell`), not only in
         // the directory name: fetches can then load any probed-list
         // subset as ONE multi-path scan whose relation carries no
@@ -446,11 +445,11 @@ object Similarity {
     * embedding scan in it is the delta itself.
     */
   private[graft] def deltaIvfPostingsPath(s: SparkSession, d: String,
-      pred: Column = deltaVecPred, tag: String = "v1"): String =
+      delta: Delta = Delta.Embeddings): String =
     graft.util.ScratchIndex.materializePath(
-      s, s"ivfdelta_v2_${tag}_${graft.util.ScratchIndex.corpusTag(d)}") { tmp =>
-      embRelation(s, d).filter(pred)
-        .withColumn("cent_id", bestCentroid(baseIvfCentroids(s, d, pred, tag)))
+      s, delta.key("ivfdelta_v2", d)) { tmp =>
+      delta.batch(embRelation(s, d))
+        .withColumn("cent_id", bestCentroid(baseIvfCentroids(s, d, delta)))
         .withColumn("cell", col("cent_id"))
         .repartition(IvfK, col("cent_id"))
         .write.partitionBy("cent_id")

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.Delta
 import graft.util.Tables._
 
 /** Skew-handling and sketch aggregates.
@@ -592,19 +593,15 @@ object Skew {
     * Cost shape: the daily job scans the DELTA once (its sketch
     * build); the fold itself touches two ≤ (K+1)·|segments| summaries
     * — bounded work, zero base re-scan, the dedup_lsh_incremental /
-    * graph_degree_incremental discipline. Delta convention: lineitem
-    * rows of orders with `l_orderkey % 10 == 7` (the repo-wide
-    * "today's batch" shape, Graph.deltaOrderPred).
+    * graph_degree_incremental discipline. The split is
+    * [[Delta.Lineitem]], the graph paths' batch.
     */
-  private[graft] val thetaDeltaPred = pmod(col("l_orderkey"), lit(10)) === 7
-
   /** Yesterday's summary: sketch of base lineitem, persisted once per
     * corpus (the summary table a real pipeline reads, never rebuilds).
     */
   private[graft] def thetaBaseSketchTable(s: SparkSession, d: String): DataFrame =
-    graft.util.ScratchIndex.materialize(
-        s, s"thetabase_v1_${graft.util.ScratchIndex.corpusTag(d)}") {
-      thetaSummaryOf(thetaDsetOf(lineitem(s, d).filter(!thetaDeltaPred)))
+    graft.util.ScratchIndex.materialize(s, Delta.Lineitem.key("thetabase", d)) {
+      thetaSummaryOf(thetaDsetOf(Delta.Lineitem.base(lineitem(s, d))))
     }
 
   /** Today's sketch: built from the delta rows only — the single
@@ -613,9 +610,8 @@ object Skew {
     * not repeated delta extraction).
     */
   private[graft] def thetaDeltaSketchTable(s: SparkSession, d: String): DataFrame =
-    graft.util.ScratchIndex.materialize(
-        s, s"thetadelta_v1_${graft.util.ScratchIndex.corpusTag(d)}") {
-      thetaSummaryOf(thetaDsetOf(lineitem(s, d).filter(thetaDeltaPred)))
+    graft.util.ScratchIndex.materialize(s, Delta.Lineitem.key("thetadelta", d)) {
+      thetaSummaryOf(thetaDsetOf(Delta.Lineitem.batch(lineitem(s, d))))
     }
 
   /** The fold: two (seg, h, theta) summaries → the merged summary.
@@ -660,8 +656,7 @@ object Skew {
     * corpus-sized version cost 14 GB of spill pre-memoization).
     */
   private[graft] def thetaMergedSketch(s: SparkSession, d: String): DataFrame =
-    graft.util.ScratchIndex.materialize(
-        s, s"thetamerged_v1_${graft.util.ScratchIndex.corpusTag(d)}") {
+    graft.util.ScratchIndex.materialize(s, Delta.Lineitem.key("thetamerged", d)) {
       thetaMergeSummaries(thetaBaseSketchTable(s, d),
         thetaDeltaSketchTable(s, d))
     }

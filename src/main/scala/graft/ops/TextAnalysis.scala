@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.Delta
 import graft.util.Tables._
 
 /** Text-analysis operators for an LLM training-data pipeline over the
@@ -589,12 +590,11 @@ object TextAnalysis {
   val ngramNoveltySql: String = noveltySqlCore("")
 
   /** Incremental novelty scoring — the daily-ingest form of
-    * [[ngramNovelty]]: score TODAY'S batch (the standing
-    * `doc_id % 10 == 7` delta, the same fixture convention as
-    * [[Dedup.deltaDocPred]]) against everything already seen, where
-    * "seen" is a memoized FIRST-OWNER INDEX (shingle → min doc_id
-    * over the base corpus) built once per corpus and re-read
-    * thereafter. The merged owner per shingle is
+    * [[ngramNovelty]]: score TODAY'S batch ([[Delta.Documents]], the
+    * LSH and clustering paths' batch) against everything already
+    * seen, where "seen" is a memoized FIRST-OWNER INDEX (shingle →
+    * min doc_id over the base corpus) built once per corpus and
+    * re-read thereafter. The merged owner per shingle is
     * min(base owner, delta-internal min) = the min over the WHOLE
     * corpus, so the emitted scores are provably identical to the full
     * rebuild restricted to the delta — the oracle replays the
@@ -614,14 +614,13 @@ object TextAnalysis {
     * invariant filter so the as-counted plan is the real plan.
     */
   def noveltyIncremental(s: SparkSession, d: String): DataFrame = {
-    val deltaPred = Dedup.deltaDocPred
     val owners = graft.util.ScratchIndex.materialize(
-        s, s"novowner_v1_${graft.util.ScratchIndex.corpusTag(d)}") {
-      documents(s, d).filter(!deltaPred)
+        s, Delta.Documents.key("novowner", d)) {
+      Delta.Documents.base(documents(s, d))
         .select(col("doc_id"), explode(Dedup.shingles(col("text"))).as("s"))
         .groupBy(col("s")).agg(min(col("doc_id")).as("base_owner"))
     }
-    val delta = documents(s, d).filter(deltaPred)
+    val delta = Delta.Documents.batch(documents(s, d))
       .select(col("doc_id"), Dedup.shingles(col("text")).as("sh"))
     val base = delta.select(col("doc_id"),
       size(col("sh")).cast("bigint").as("n_shingles"))

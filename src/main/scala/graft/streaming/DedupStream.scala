@@ -123,9 +123,8 @@ object DedupStream {
     // (the landing is input, not run state)
     val landing = graft.util.ScratchIndex.materializePath(s,
       s"lshidx_landing_${graft.util.ScratchIndex.corpusTag(dir)}") { tmp =>
-      graft.util.Tables.documents(s, dir)
-        .select(col("doc_id"), col("text"))
-        .filter(dedup.deltaDocPred)
+      graft.util.Delta.Documents.batch(graft.util.Tables.documents(s, dir)
+        .select(col("doc_id"), col("text")))
         .repartition(4)
         .write.mode(SaveMode.Overwrite).parquet(tmp)
     }
@@ -179,8 +178,8 @@ object DedupStream {
               .select(col("doc_id"), col("band_idx"), col("band_sig")))
             .unionByName(bBands)
           // the probe side is ONE micro-batch's band rows —
-          // broadcast-sized by construction (the bcastDelta argument
-          // of Dedup.deltaVerifiedEdges) — so the index side streams
+          // broadcast-sized by construction (a broadcast Delta in
+          // Dedup.deltaVerifiedEdges) — so the index side streams
           // through the band join with no exchange
           val cand = idxBands.as("x").join(broadcast(bBands.as("y")),
               col("x.band_idx") === col("y.band_idx")

@@ -5,12 +5,12 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong, AtomicLongArray}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryListener._
 import graft.ops.{Dedup, Graph, Relational3, Similarity}
-import graft.util.{ScratchIndex, Tables}
+import graft.util.{Delta, ScratchIndex, Tables}
 
 /** Development profiling entry (not part of the Bench/Verify contract).
   *
@@ -292,9 +292,9 @@ object Profile {
   private def step(label: String, rounds: Int = 1)(run: => Any): Step =
     Step(label, rounds, () => run)
 
-  /** A control: warm-up table, delta predicate, steps over (s, d, delta). */
-  private final case class Control(table: String, slice: SparkSession => Column,
-      steps: (SparkSession, String, Column) => Seq[Step])
+  /** A control: warm-up table, delta, steps over (s, d, delta). */
+  private final case class Control(table: String, slice: SparkSession => Delta,
+      steps: (SparkSession, String, Delta) => Seq[Step])
 
   /** `key`'s sf0.1 maximum: ScaleFixture shifts keys per copy, so
     * the rows at or below it are copy 0's at every decade.
@@ -303,13 +303,15 @@ object Profile {
     Tables.t(s, BaseDir, table).agg(max(col(key))).head().getLong(0)
 
   /** The constant-sized delta: copy 0's `key % 10 = 7` rows. */
-  private def constSlice(s: SparkSession, table: String, key: String): Column =
-    col(key) <= sf01Max(s, table, key) && pmod(col(key), lit(10)) === 7
+  private def constSlice(s: SparkSession, table: String, key: String): Delta =
+    Delta(col(key) <= sf01Max(s, table, key) && pmod(col(key), lit(10)) === 7,
+      "const", broadcast = true)
 
-  /** The orders delta (`o_orderdate >= 1999-01-01`) pinned to copy 0's customers. */
-  private def ordersSlice(s: SparkSession): Column =
-    col("o_orderdate") >= lit("1999-01-01").cast("timestamp") &&
-      col("o_custkey") <= sf01Max(s, "orders", "o_custkey")
+  /** The orders delta ([[Delta.Orders]]) pinned to copy 0's customers. */
+  private def ordersSlice(s: SparkSession): Delta =
+    Delta(Delta.Orders.pred &&
+      col("o_custkey") <= sf01Max(s, "orders", "o_custkey"),
+      "const", broadcast = true)
 
   /** Constant-sized-delta controls. A registered `*_incremental`
     * query's fixture delta is a constant FRACTION of the corpus, so its
@@ -325,67 +327,67 @@ object Profile {
     */
   private lazy val controls: Map[String, Control] = Map(
     "incdegreeconst" -> Control("lineitem", constSlice(_, "lineitem", "l_orderkey"),
-      (s, d, p) => Seq(
+      (s, d, delta) => Seq(
         step("delta mine (const slice, once per batch)")(
-          Graph.deltaGraphPairs(s, d, p, "const").count()),
+          Graph.deltaGraphPairs(s, d, delta).count()),
         step("base artifacts (once ever)")(
-          Graph.baseGraphDegrees(s, d, p, "const").count()),
+          Graph.baseGraphDegrees(s, d, delta).count()),
         step("incremental update (const delta)", 3)(
-          Graph.degreeIncrementalWith(s, d, p, "const", bcastDelta = true).count()))),
+          Graph.degreeIncremental(s, d, delta).count()))),
     "inctriconst" -> Control("lineitem", constSlice(_, "lineitem", "l_orderkey"),
-      (s, d, p) => Seq(
+      (s, d, delta) => Seq(
         step("base edges+adjacency+summary (once ever)") {
-          Graph.baseTriangleStats(s, d, p, "const").count()
-          Graph.baseGraphAdjacency(s, d, p, "const").count()
-          Graph.baseP1Vertices(s, d, p, "const").count()
+          Graph.baseTriangleStats(s, d, delta).count()
+          Graph.baseGraphAdjacency(s, d, delta).count()
+          Graph.baseP1Vertices(s, d, delta).count()
         },
         step("delta mine + dup filter (once per batch)")(
-          Graph.freshDeltaEdges(s, d, p, "const", bcastDelta = true).count()),
+          Graph.freshDeltaEdges(s, d, delta).count()),
         step("incremental update (const delta)", 3)(
-          Graph.trianglesIncrementalParts(s, d, p, "const", bcastDelta = true).count()))),
-    "incscd2const" -> Control("orders", ordersSlice, (s, d, p) => Seq(
-      step("delta orders (const slice)")(Tables.orders(s, d).filter(p).count()),
+          Graph.trianglesIncrementalParts(s, d, delta).count()))),
+    "incscd2const" -> Control("orders", ordersSlice, (s, d, delta) => Seq(
+      step("delta orders (const slice)")(delta.batch(Tables.orders(s, d)).count()),
       step("base dimension (yesterday's output)")(
-        Relational3.baseScd2Table(s, d, p, "const").count()),
+        Relational3.baseScd2Table(s, d, delta).count()),
       step("delta mine (once per batch)")(
-        Relational3.deltaOrdersTable(s, d, p, "const").count()),
+        Relational3.deltaOrdersTable(s, d, delta).count()),
       step("append-merge (const delta)", 3)(
-        Relational3.scd2IncrementalWith(s, d, p, "const").count()),
+        Relational3.scd2Incremental(s, d, delta).count()),
       step("full rebuild (what it replaces)")(Relational3.scd2(s, d).count()))),
-    "incaggconst" -> Control("orders", ordersSlice, (s, d, p) => Seq(
+    "incaggconst" -> Control("orders", ordersSlice, (s, d, delta) => Seq(
       step("base MV state (yesterday's output)")(
-        Relational3.baseAggState(s, d, p, "const").count()),
+        Relational3.baseAggState(s, d, delta).count()),
       step("delta mine (once per batch)")(
-        Relational3.deltaAggState(s, d, p, "const").count()),
+        Relational3.deltaAggState(s, d, delta).count()),
       step("state merge (const delta)", 3)(
-        Relational3.aggIncrementalWith(s, d, p, "const", bcastDelta = true).count()),
+        Relational3.aggIncremental(s, d, delta).count()),
       step("full rebuild (what it replaces)")(
         Relational3.aggStateOf(Tables.orders(s, d)).count()))),
     "incclustersconst" -> Control("documents", constSlice(_, "documents", "doc_id"),
-      (s, d, p) => Seq(
-        step("delta docs (const slice)")(Tables.documents(s, d).filter(p).count()),
+      (s, d, delta) => Seq(
+        step("delta docs (const slice)")(delta.batch(Tables.documents(s, d)).count()),
         step("base sig+band+edge index (once ever)") {
-          Dedup.baseIndexEdges(s, d, p, "const").count()
-          Dedup.baseIndexBands(s, d, p, "const").count()
+          Dedup.baseIndexEdges(s, d, delta).count()
+          Dedup.baseIndexBands(s, d, delta).count()
         },
         step("base labels (yesterday's output)")(
-          Dedup.baseClusterLabels(s, d, p, "const").count()),
+          Dedup.baseClusterLabels(s, d, delta).count()),
         // each round drops the memoized output, so it re-runs the daily
         // job and its time includes publishing the result
         step("incremental update (const delta)", 3) {
-          ScratchIndex.dropKey(s"dedupclustinc_const_${ScratchIndex.corpusTag(d)}")
-          Dedup.dedupClustersIncrementalWith(s, d, p, "const", bcastDelta = true).count()
+          ScratchIndex.dropKey(delta.key("dedupclustinc", d))
+          Dedup.dedupClustersIncremental(s, d, delta).count()
         })),
     "incivfconst" -> Control("embeddings", constSlice(_, "embeddings", "vec_id"),
-      (s, d, p) => Seq(
-        step("delta vectors (const slice)")(Tables.embeddings(s, d).filter(p).count()),
+      (s, d, delta) => Seq(
+        step("delta vectors (const slice)")(delta.batch(Tables.embeddings(s, d)).count()),
         step("frozen quantizer + base postings (once ever)") {
           Similarity.baseIvfPostings(s, d).count()
-          Similarity.baseIvfPostingsPath(s, d, p, "const")
+          Similarity.baseIvfPostingsPath(s, d, delta)
         },
         step("delta publish (const delta)", 3) {
-          ScratchIndex.dropKey(s"ivfdelta_v2_const_${ScratchIndex.corpusTag(d)}")
-          Similarity.deltaIvfPostingsPath(s, d, p, "const")
+          ScratchIndex.dropKey(delta.key("ivfdelta_v2", d))
+          Similarity.deltaIvfPostingsPath(s, d, delta)
         })))
 
   private def runControl(s: SparkSession, d: String, name: String): Unit = {

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ops.Curation
+import graft.util.Delta
 
 class CurationSpec extends SparkTestBase {
 
@@ -78,11 +79,15 @@ class CurationSpec extends SparkTestBase {
     import org.apache.spark.sql.functions.{col, pmod, lit}
     for (dir <- Seq(sf, "/root/testdata/sf0.01")) {
       val full = Curation.contamination(spark, dir).collect().toSeq
-      val inc = Curation.contaminationIncremental(spark, dir)
-        .collect().toSeq
       // deterministic total order (ratio desc, doc_id asc) → direct
       // sequence equality (the scd2Incremental discipline)
-      assert(inc === full, s"merge != rebuild at $dir")
+      val incs = for (delta <- deltasFor(Delta.Documents)) yield {
+        val inc = Curation.contaminationIncremental(spark, dir, delta)
+          .collect().toSeq
+        assert(inc === full, s"merge != rebuild at $dir (${delta.tag} delta)")
+        inc
+      }
+      val inc = incs.head
       // the split is non-vacuous: the top-50 contains docs from BOTH
       // the base and the delta epoch, or the proof proves nothing
       val deltaIds = inc.map(_.getLong(0))

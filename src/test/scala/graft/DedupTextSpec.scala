@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ops.{Dedup, TextAnalysis}
+import graft.util.Delta
 
 /** Dedup + text-analysis semantics, including cross-validation of the
   * murmur3-seeded paths (MinHash/SimHash) that the DuckDB oracle
@@ -149,12 +150,14 @@ class DedupTextSpec extends SparkTestBase {
     // base ∪ delta, keep base-base edges untouched) must produce
     // EXACTLY the edge relation a from-scratch rebuild would — same
     // candidates, same estimates, same verified Jaccards
-    val inc = Dedup.incrementalEdges(spark, sf)
-      .as[(Long, Long, Double, Double)].collect().toSet
     val full = Dedup.candidateEdges(spark, sf)
       .as[(Long, Long, Double, Double)].collect().toSet
-    assert(inc.nonEmpty)
-    assert(inc === full)
+    for (delta <- deltasFor(Delta.Documents)) {
+      val inc = Dedup.incrementalEdges(spark, sf, delta)
+        .as[(Long, Long, Double, Double)].collect().toSet
+      assert(inc.nonEmpty)
+      assert(inc === full, s"merge != rebuild under the ${delta.tag} delta")
+    }
   }
 
   test("incremental clustering equals the full rebuild, doc for doc") {
@@ -164,12 +167,14 @@ class DedupTextSpec extends SparkTestBase {
     // component-min label and same cluster size for every doc,
     // including merges of previously separate base components and
     // delta-only components
-    val inc = Dedup.dedupClustersIncremental(spark, sf)
-      .as[(Long, Long, Long)].collect()
     val full = Dedup.dedupClusters(spark, sf)
       .as[(Long, Long, Long)].collect()
-    assert(inc.nonEmpty)
-    assert(inc === full)
+    for (delta <- deltasFor(Delta.Documents)) {
+      val inc = Dedup.dedupClustersIncremental(spark, sf, delta)
+        .as[(Long, Long, Long)].collect()
+      assert(inc.nonEmpty)
+      assert(inc === full, s"merge != rebuild under the ${delta.tag} delta")
+    }
   }
 
   test("canonical retention keeps exactly one argmax-quality doc per cluster") {

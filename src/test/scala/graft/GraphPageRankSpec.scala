@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ops.Graph
-import graft.util.LoopScope
+import graft.util.{Delta, LoopScope}
 
 /** PageRank (bounded power iteration) and the BFS frontier-bound
   * measurement: the two propagation primitives are cross-checked
@@ -181,12 +181,14 @@ class GraphPageRankSpec extends SparkTestBase {
     // spec-side adjacency (which is built over all orders)
     val want = adj.toSeq.map { case (v, ns) => (v, ns.size.toLong) }
       .sortBy(_._1)
-    val got = Graph.degreeIncremental(spark, sf)
-      .as[(Long, Long)].collect().toSeq
-    assert(got === want)
+    for (delta <- deltasFor(Delta.Lineitem)) {
+      val got = Graph.degreeIncremental(spark, sf, delta)
+        .as[(Long, Long)].collect().toSeq
+      assert(got === want, s"merge != rebuild under the ${delta.tag} delta")
+    }
     // the base split is real on this corpus: some orders are delta
-    val delta = spark.read.parquet(s"$sf/lineitem.parquet")
-      .filter(pmod($"l_orderkey", lit(10)) === 7).count()
+    val delta = Delta.Lineitem.batch(
+      spark.read.parquet(s"$sf/lineitem.parquet")).count()
     assert(delta > 0L, "delta fixture is empty — the test is vacuous")
   }
 
@@ -226,23 +228,26 @@ class GraphPageRankSpec extends SparkTestBase {
       (a, ns) <- adj.toSeq
       b <- ns if a < b
     } yield nbr(a).count(c => c > b && nbr(b).contains(c)).toLong).sum
-    val parts = Graph.trianglesIncrementalParts(spark, sf,
-        pmod($"l_orderkey", lit(10)) === 7, "v1", bcastDelta = false)
-      .as[(Long, Long, Long, Long, Long, Long, Long)].collect()
-    assert(parts.length === 1)
-    val (nTri, nEdges, nLeft, maxV, t1, t2, t3) = parts.head
-    assert(nTri === triTrue, s"incremental $nTri vs plain-Scala $triTrue")
-    // the maintained summary columns match the full rebuild's
     val full = Graph.triangles(spark, sf)
       .as[(Long, Long, Long, Long)].collect().head
-    assert((nTri, nEdges, nLeft, maxV) === full)
+    val t1s = for (delta <- deltasFor(Delta.Lineitem)) yield {
+      val parts = Graph.trianglesIncrementalParts(spark, sf, delta)
+        .as[(Long, Long, Long, Long, Long, Long, Long)].collect()
+      assert(parts.length === 1)
+      val (nTri, nEdges, nLeft, maxV, t1, t2, t3) = parts.head
+      assert(nTri === triTrue,
+        s"incremental $nTri vs plain-Scala $triTrue (${delta.tag} delta)")
+      // the maintained summary columns match the full rebuild's
+      assert((nTri, nEdges, nLeft, maxV) === full, s"${delta.tag} delta")
+      // every class is a non-negative exact integer bounded by the total
+      assert(t1 >= 0L && t2 >= 0L && t3 >= 0L)
+      assert(t1 + t2 + t3 <= nTri)
+      t1
+    }
     // non-vacuity: a real delta exists, and the exactly-one-delta-edge
-    // class (the dominant incremental class) is exercised; every
-    // class is a non-negative exact integer bounded by the total delta
+    // class (the dominant incremental class) is exercised
     val fresh = Graph.freshDeltaEdges(spark, sf).count()
     assert(fresh > 0L, "fresh delta edge set is empty — test is vacuous")
-    assert(t1 > 0L, "no exactly-one-delta-edge triangle at sf0.001")
-    assert(t1 >= 0L && t2 >= 0L && t3 >= 0L)
-    assert(t1 + t2 + t3 <= nTri)
+    assert(t1s.head > 0L, "no exactly-one-delta-edge triangle at sf0.001")
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ops.{Curation, Events, Graph}
+import graft.util.Delta
 
 /** Specs for the round-3 operators: graph joins, time-series
   * resample/gap-fill, range frames, stratified sampling, z-order
@@ -193,10 +194,12 @@ class GraphTimeSeriesSpec extends SparkTestBase {
 
   test("incremental SCD2 equals the full rebuild row-for-row") {
     val full = graft.ops.Relational3.scd2(spark, sf)
-    val inc = graft.ops.Relational3.scd2Incremental(spark, sf)
-    assert(inc.count() === full.count())
-    assert(inc.exceptAll(full).count() === 0)
-    assert(full.exceptAll(inc).count() === 0)
+    for (delta <- deltasFor(Delta.Orders)) {
+      val inc = graft.ops.Relational3.scd2Incremental(spark, sf, delta)
+      assert(inc.count() === full.count(), s"${delta.tag} delta")
+      assert(inc.exceptAll(full).count() === 0, s"${delta.tag} delta")
+      assert(full.exceptAll(inc).count() === 0, s"${delta.tag} delta")
+    }
   }
 
   test("rolling median stays within each frame's min/max envelope") {

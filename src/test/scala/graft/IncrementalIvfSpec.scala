@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ops.Similarity
+import graft.util.Delta
 
 /** Incremental IVF maintenance: merge ≡ rebuild, on postings and on
   * answers, plus a recall floor — the rel_scd2_incremental /
@@ -30,8 +31,8 @@ class IncrementalIvfSpec extends SparkTestBase {
     assert(inc.length === reb.length)
     assert(inc === reb)
     // the delta really is in the merged index (non-vacuous merge)
-    val deltaIds = Similarity.embRelation(spark, sf)
-      .filter(Similarity.deltaVecPred).select($"vec_id").as[Long].collect()
+    val deltaIds = Delta.Embeddings.batch(Similarity.embRelation(spark, sf))
+      .select($"vec_id").as[Long].collect()
     assert(deltaIds.nonEmpty)
     val incIds = inc.map(_._1).toSet
     assert(deltaIds.forall(incIds))

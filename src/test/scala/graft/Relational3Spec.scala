@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ops.Relational3
+import graft.util.Delta
 
 class Relational3Spec extends SparkTestBase {
 
@@ -19,7 +20,6 @@ class Relational3Spec extends SparkTestBase {
 
   test("incremental aggregate merge equals the full rebuild, key for key") {
     import spark.implicits._
-    val merged = Relational3.aggIncremental(spark, sf)
     val rebuilt = spark.read.parquet(s"$sf/orders.parquet")
       .groupBy($"o_custkey")
       .agg(count(lit(1)).as("n_orders"),
@@ -27,13 +27,15 @@ class Relational3Spec extends SparkTestBase {
           .as("total_spend"),
         max($"o_orderdate").as("last_order"))
       .orderBy("o_custkey")
-    assert(merged.exceptAll(rebuilt).count() === 0)
-    assert(rebuilt.exceptAll(merged).count() === 0)
+    for (delta <- deltasFor(Delta.Orders)) {
+      val merged = Relational3.aggIncremental(spark, sf, delta)
+      assert(merged.exceptAll(rebuilt).count() === 0, s"${delta.tag} delta")
+      assert(rebuilt.exceptAll(merged).count() === 0, s"${delta.tag} delta")
+    }
     // the split is non-vacuous: both epochs really contribute
-    val cutoff = lit("1999-01-01").cast("timestamp")
     val ord = spark.read.parquet(s"$sf/orders.parquet")
-    assert(ord.filter($"o_orderdate" < cutoff).count() > 0)
-    assert(ord.filter($"o_orderdate" >= cutoff).count() > 0)
+    assert(Delta.Orders.base(ord).count() > 0)
+    assert(Delta.Orders.batch(ord).count() > 0)
   }
 
   test("append-merge SCD2: adversarial shapes reproduce the rebuild " +
@@ -72,7 +74,8 @@ class Relational3Spec extends SparkTestBase {
     rows.coalesce(1).write.parquet(s"$dir/orders.parquet")
     val pred = col("o_orderdate") >=
       lit("2000-01-01").cast("timestamp")
-    val inc = Relational3.scd2IncrementalWith(spark, dir, pred, "adv")
+    val inc = Relational3
+      .scd2Incremental(spark, dir, Delta(pred, "adv", broadcast = false))
       .collect().toSeq
     val full = Relational3.scd2(spark, dir).collect().toSeq
     assert(inc === full, "append-merge diverged from the rebuild")
@@ -84,7 +87,7 @@ class Relational3Spec extends SparkTestBase {
     // agg-state merge over the same adversarial corpus (new customer
     // branch + patch branch both non-empty)
     val aggInc = Relational3
-      .aggIncrementalWith(spark, dir, pred, "adv", bcastDelta = true)
+      .aggIncremental(spark, dir, Delta(pred, "adv", broadcast = true))
       .collect().toSeq
     val aggFull = spark.read.parquet(s"$dir/orders.parquet")
       .groupBy($"o_custkey")
@@ -94,6 +97,20 @@ class Relational3Spec extends SparkTestBase {
         max($"o_orderdate").as("last_order"))
       .orderBy("o_custkey").collect().toSeq
     assert(aggInc === aggFull, "agg-state merge diverged from rebuild")
+  }
+
+  test("a scratch key belongs to one predicate: a new predicate " +
+      "under an old tag throws instead of reading the old artifacts") {
+    def from(day: String) = Delta(
+      col("o_orderdate") >= lit(day).cast("timestamp"), "alias",
+      broadcast = false)
+    val key = from("2000-01-01").key("aggstate", sf)
+    // the same predicate may ask again, broadcast or not
+    assert(from("2000-01-01").copy(broadcast = true)
+      .key("aggstate", sf) === key)
+    val e = intercept[Delta.AliasedKey](from("2001-01-01").key("aggstate", sf))
+    assert(e.isInstanceOf[IllegalArgumentException])
+    assert(e.getMessage.contains(key))
   }
 
   test("const-shape incremental paths plan broadcast-only joins " +
@@ -108,8 +125,8 @@ class Relational3Spec extends SparkTestBase {
     val p1 = scd.queryExecution.executedPlan.toString()
     assert(!p1.contains("SortMergeJoin") && !p1.contains("ShuffledHashJoin"),
       s"non-broadcast join in the SCD2 update:\n$p1")
-    val agg = Relational3.aggIncrementalWith(
-      spark, sf, Relational3.ordersDeltaPred, "bc", bcastDelta = true)
+    val agg = Relational3.aggIncremental(
+      spark, sf, Delta.Orders.copy(broadcast = true))
     agg.collect()
     val p2 = agg.queryExecution.executedPlan.toString()
     assert(!p2.contains("SortMergeJoin") && !p2.contains("ShuffledHashJoin"),

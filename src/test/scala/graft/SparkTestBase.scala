@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.lit
 import org.scalatest.funsuite.AnyFunSuite
+import graft.util.Delta
 
 /** One shared local session per suite (lazy; Spark reuses the
   * singleton across suites in the same JVM).
@@ -9,6 +11,14 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.session
   val sf: String = "/root/testdata/sf0.001"
+
+  /** The registered split followed by the two hostile ones each
+    * merge ≡ rebuild spec also folds: an empty batch, and a batch that
+    * is the whole corpus (so the base is empty).
+    */
+  def deltasFor(registered: Delta): Seq[Delta] = Seq(registered,
+    Delta(lit(false), "empty", broadcast = false),
+    Delta(lit(true), "all", broadcast = false))
 }
 
 object SparkTestBase {
