@@ -1,7 +1,11 @@
 package graft
 
+import java.io.File
+import scala.util.control.NonFatal
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.Relational
+import graft.recommend.AlsPipeline
 
 /** Semantic properties of the core relational operators (SURVEY.md §5
   * tier 1-2) on the sf0.001 testdata. DuckDB hash-equality is the
@@ -13,11 +17,37 @@ class RelationalSpec extends SparkTestBase {
     assert(SparkEntry.entry(spark).count() === 10)
   }
 
-  test("every query runs non-empty at sf0.001") {
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val n = fn(spark, sf).count()
-      assert(n > 0, s"query $name returned 0 rows")
+  /** Runs every query in `qs` in name order and fails once, naming
+    * each one that returned 0 rows or threw, so one failure does not
+    * hide the queries after it.
+    */
+  private def assertAllNonEmpty(
+      qs: Map[String, (SparkSession, String) => DataFrame]): Unit = {
+    val offenders = qs.keys.toSeq.sorted.flatMap { name =>
+      try {
+        if (qs(name)(spark, sf).count() > 0) None
+        else Some(s"$name: 0 rows")
+      } catch {
+        case NonFatal(e) =>
+          Some(s"$name: ${e.getClass.getName}: ${e.getMessage}")
+      }
     }
+    assert(offenders.isEmpty, s"${offenders.size} of ${qs.size} " +
+      s"queries returned no rows or threw:\n${offenders.mkString("\n")}")
+  }
+
+  // The reference-data queries ignore sfDir (AlsPipeline.queries), so
+  // they are checked on their own, where their CSVs exist.
+  test("every query runs non-empty at sf0.001") {
+    assertAllNonEmpty(SparkEntry.queries -- AlsPipeline.queries.keySet)
+  }
+
+  test("every reference-data query runs non-empty") {
+    val missing = Seq("ratings.csv", "movies.csv")
+      .map(f => new File(AlsPipeline.DataDir, f)).filterNot(_.isFile)
+    assume(missing.isEmpty,
+      s"reference CSVs absent: ${missing.mkString(", ")}")
+    assertAllNonEmpty(AlsPipeline.queries)
   }
 
   test("anti-join and semi-join partition the dimension") {
