@@ -17,9 +17,8 @@ import org.apache.spark.sql.expressions.Aggregator
   * shuffle — the groupBy path does partial aggregation, the
   * distinct+window path cannot).
   *
-  * The buffer is a sorted distinct long array maintained in place
-  * (the KllQuantiles.Holder discipline: Java serialization only at
-  * exchange boundaries, never per row). k is tiny (65 for the theta
+  * The buffer is a sorted distinct long array maintained in place:
+  * it is Java-serialized only at exchange boundaries, never per row. k is tiny (65 for the theta
   * summaries), so binary-search insertion is effectively free next
   * to the md5 the input column already pays.
   *

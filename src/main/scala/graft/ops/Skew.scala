@@ -223,12 +223,17 @@ object Skew {
       .orderBy("event_type")
   }
 
+  /** KLL `k` of `sketch_kll_rollup` and `stream_quantile_sketch`:
+    * about 1.65% normalized rank error at 99% confidence.
+    */
+  private[graft] val KllK = 200
+
   /** Mergeable-QUANTILE-sketch rollup — the percentile counterpart of
-    * `hllRollup`, via graft's KLL aggregate pair (functions/
-    * KllQuantiles.scala, datasketches-backed like Spark 4's own hll_*
-    * functions): per-day KLL sketches of the value distribution per
-    * event type, merged into the full-window sketch WITHOUT re-reading
-    * raw data, then p50/p90/p99 estimates read from the merged sketch.
+    * `hllRollup`, via Spark's datasketches-backed `kll_sketch_agg_double`
+    * / `kll_merge_agg_double` pair: per-day KLL sketches of the value
+    * distribution per event type, merged into the full-window sketch
+    * WITHOUT re-reading raw data, then p50/p90/p99 estimates read from
+    * the merged sketch.
     * Exact percentiles at 100 TB need a global sort per group; a KLL
     * sketch is a few KB with a proven ~1.65% rank-error bound and —
     * unlike percentile_approx, whose result shifts with partition
@@ -239,20 +244,19 @@ object Skew {
     * daily-merge path agrees with a direct whole-window sketch.
     */
   def kllRollup(s: SparkSession, d: String): DataFrame = {
-    val kllAgg = udaf(graft.functions.KllQuantiles.SketchAgg)
-    val kllMerge = udaf(graft.functions.KllQuantiles.MergeAgg)
-    val q = udf(graft.functions.KllQuantiles.quantile _)
+    def q(rank: Double): Column =
+      round(kll_sketch_get_quantile_double(col("sk"), lit(rank)), 6)
     val daily = events(s, d)
       .withColumn("day", expr("ts_us div 86400000000"))
       .groupBy(col("event_type"), col("day"))
-      .agg(kllAgg(col("value")).as("sk"), count(lit(1)).as("n"))
+      .agg(kll_sketch_agg_double(col("value"), KllK).as("sk"),
+        count(lit(1)).as("n"))
     daily.groupBy(col("event_type"))
-      .agg(kllMerge(col("sk")).as("sk"),
+      .agg(kll_merge_agg_double(col("sk"), KllK).as("sk"),
         sum(col("n")).as("n_events"), count(lit(1)).as("n_days"))
       .select(col("event_type"), col("n_events"), col("n_days"),
-        round(q(col("sk"), lit(0.5)), 6).as("approx_p50"),
-        round(q(col("sk"), lit(0.9)), 6).as("approx_p90"),
-        round(q(col("sk"), lit(0.99)), 6).as("approx_p99"))
+        q(0.5).as("approx_p50"), q(0.9).as("approx_p90"),
+        q(0.99).as("approx_p99"))
       .orderBy("event_type")
   }
 
@@ -303,6 +307,12 @@ object Skew {
     """SELECT event_type, count(*) AS cnt FROM events
       |GROUP BY event_type ORDER BY cnt DESC, event_type LIMIT 8""".stripMargin
 
+  /** log2 of the nominal entries of `sketch_theta_ops`' theta
+    * sketches: 2^12 = 4,096 entries, relative standard error
+    * 1/√4096 ≈ 1.6% once a set outgrows the exact mode.
+    */
+  private[graft] val ThetaLgK = 12
+
   /** Theta-sketch SET ALGEBRA over distinct users per event type —
     * the audience-overlap / funnel-conversion primitive: "distinct
     * users who viewed AND purchased" is NOT computable from
@@ -311,33 +321,38 @@ object Skew {
     * uniform hash sample of the distinct set, so union, intersection
     * and difference compose sketch-to-sketch over stored summaries —
     * no raw-data re-read, any segment pair answerable after the
-    * fact. Build is one exact-shuffle-free pass (partial unions
-    * merge associatively); the per-type sketches collected to the
-    * driver are ≤ 4096 entries each by construction (segment-count
-    * bounded, like the other ≤20-row driver sites). Estimates are
-    * approximate ⇒ rows-only; SkewSketchSpec pins each estimate
-    * against the exact distinct sets within the published RSE bound.
+    * fact. One plan over one scan of `events`: a single aggregate
+    * builds each pinned type's `theta_sketch_agg` sketch (partial
+    * sketches merge associatively, no shuffle of raw keys), and
+    * Spark's `theta_union` / `theta_intersection` / `theta_difference`
+    * answer the pinned pairs on that one row. A pinned type with no
+    * events fails the query with `raise_error`, naming the type, so
+    * building the plan starts no job. Estimates are approximate ⇒
+    * rows-only; SkewSketchSpec pins each estimate against the exact
+    * distinct sets within the published RSE bound.
     */
   def thetaOps(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val thetaAgg = udaf(graft.functions.ThetaSketches.SketchAgg)
-    val perType = events(s, d)
-      .groupBy(col("event_type"))
-      .agg(thetaAgg(col("user_id")).as("sk"))
-      .collect()
-      .map(r => r.getString(0) -> r.getAs[Array[Byte]]("sk")).toMap
-    val T = graft.functions.ThetaSketches
     val pairs = Seq(("view", "purchase"), ("view", "click"),
       ("signup", "purchase"))
-    pairs.map { case (a, b) =>
-      (a, b,
-        math.round(T.estimate(perType(a))),
-        math.round(T.estimate(perType(b))),
-        math.round(T.unionEstimate(perType(a), perType(b))),
-        math.round(T.intersectEstimate(perType(a), perType(b))),
-        math.round(T.aNotBEstimate(perType(a), perType(b))))
-    }.toDF("type_a", "type_b", "n_a", "n_b",
-      "n_union", "n_intersect", "n_a_not_b")
+    val types = pairs.flatMap(p => Seq(p._1, p._2)).distinct
+    val perType = types.flatMap { t =>
+      val ids = when(col("event_type") === t, col("user_id"))
+      Seq(theta_sketch_agg(ids, ThetaLgK).as(t), count(ids).as(s"n_$t"))
+    }
+    def sketch(t: String): Column = when(col(s"n_$t") > 0, col(t))
+      .otherwise(raise_error(
+        lit(s"sketch_theta_ops: pinned event type '$t' has no events")))
+    val est = theta_sketch_estimate(_: Column)
+    events(s, d).agg(perType.head, perType.tail: _*)
+      .select(explode(array(pairs.map { case (a, b) =>
+        val (ska, skb) = (sketch(a), sketch(b))
+        struct(lit(a).as("type_a"), lit(b).as("type_b"),
+          est(ska).as("n_a"), est(skb).as("n_b"),
+          est(theta_union(ska, skb, ThetaLgK)).as("n_union"),
+          est(theta_intersection(ska, skb)).as("n_intersect"),
+          est(theta_difference(ska, skb)).as("n_a_not_b"))
+      }: _*)).as("pair"))
+      .select("pair.*")
       .orderBy("type_a", "type_b")
   }
 

@@ -914,26 +914,24 @@ object EventStream {
 
   val topkSketchStreamSql: String = graft.ops.Skew.topkSketchSql
 
-  /** Streaming QUANTILE state via the custom KLL aggregator pair
-    * (functions/KllQuantiles.scala): the typed-imperative sketch
-    * buffer lives in the state store per event type and absorbs each
-    * micro-batch incrementally — the streaming face of the batch
-    * `sketch_kll_rollup`, proving the custom mergeable aggregate
-    * composes with stateful streaming exactly like Spark's built-in
-    * sketches. Approximate output → rows-only; the spec bounds every
-    * reported quantile's exact rank like the batch one.
+  /** Streaming QUANTILE state via Spark's `kll_sketch_agg_double`
+    * at the batch rollup's `k` (`Skew.KllK`): the sketch lives in the
+    * state store per event type and absorbs each micro-batch
+    * incrementally — the streaming face of the batch
+    * `sketch_kll_rollup`. Approximate output → rows-only; the spec
+    * bounds every reported quantile's exact rank like the batch one.
     */
   def kllSketchStream(s: SparkSession, dir: String): DataFrame = {
-    val kllAgg = udaf(graft.functions.KllQuantiles.SketchAgg)
-    val q = udf(graft.functions.KllQuantiles.quantile _)
+    def q(rank: Double) =
+      round(kll_sketch_get_quantile_double(col("sk"), lit(rank)), 6)
     val agg = eventsStream(s, dir)
       .select(col("event_type"), col("value"))
       .groupBy(col("event_type"))
-      .agg(kllAgg(col("value")).as("sk"), count(lit(1)).as("n_events"))
+      .agg(kll_sketch_agg_double(col("value"), graft.ops.Skew.KllK).as("sk"),
+        count(lit(1)).as("n_events"))
     runToCompletion(s, agg, OutputMode.Complete())
       .select(col("event_type"), col("n_events"),
-        round(q(col("sk"), lit(0.5)), 6).as("approx_p50"),
-        round(q(col("sk"), lit(0.9)), 6).as("approx_p90"))
+        q(0.5).as("approx_p50"), q(0.9).as("approx_p90"))
       .orderBy("event_type")
   }
 

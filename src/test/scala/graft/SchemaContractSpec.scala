@@ -1,9 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.types._
 
 /** Driver-testdata schema TRIPWIRE. The generator behind
@@ -171,35 +168,6 @@ class SchemaContractSpec extends SparkTestBase {
       .write.mode("overwrite").parquet(s"$ok/events.parquet")
     val r = graft.util.Tables.events(spark, ok).select("ts_us").head()
     assert(r.getLong(0) === 1704067200000000L)
-  }
-
-  /** `body`'s result and the Spark jobs it starts on this thread: its
-    * jobs carry a fresh job group, and a marker job started after it
-    * proves the listener has seen all of them (the bus delivers in
-    * order).
-    */
-  private def jobsStartedBy[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"counted-${java.util.UUID.randomUUID()}"
-    val jobs = new AtomicInteger
-    val marker = new CountDownLatch(1)
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet(): Unit
-          case Some(g) if g == s"$group-end" => marker.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup(group, "counted")
-      val result = body
-      sc.setJobGroup(s"$group-end", "marker")
-      spark.range(1).count()
-      assert(marker.await(60, TimeUnit.SECONDS), "marker job never reported")
-      (result, jobs.get)
-    } finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
   }
 
   test("a repeated table or artifact read infers no schema (no Spark job)") {

@@ -34,6 +34,90 @@ class SkewSketchSpec extends SparkTestBase {
     }
   }
 
+  test("theta sketches in estimation mode stay within 3 standard errors") {
+    // every pinned type has more than 2 * 2^12 distinct users, so each
+    // sketch leaves the exact mode, and the types overlap in part, so
+    // every intersection and difference is non-empty
+    val spans = Map("view" -> (0L, 20000L), "purchase" -> (10000L, 30000L),
+      "click" -> (16000L, 36000L), "signup" -> (4000L, 16000L))
+    val dir = graft.util.ScratchIndex.dir("theta_estimation_fixture").toString
+    spans.map { case (t, (lo, hi)) =>
+      spark.range(lo, hi).select($"id".as("user_id"), lit(t).as("event_type"))
+    }.reduce(_ union _)
+      .select(monotonically_increasing_id().as("event_id"),
+        (lit(1704067200000000000L) + $"user_id").as("ts"), $"user_id",
+        $"event_type", lit(1.0).as("value"))
+      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+    def users(t: String): Set[Long] = {
+      val (lo, hi) = spans(t)
+      (lo until hi).toSet
+    }
+    val k = math.pow(2, Skew.ThetaLgK)
+    def within(what: String, est: Long, exact: Int, se: Double): Unit =
+      assert(math.abs(est - exact) <= 3 * se * exact,
+        s"$what: estimate $est vs exact $exact beyond 3 standard errors")
+    val rows = Skew.thetaOps(spark, dir)
+      .as[(String, String, Long, Long, Long, Long, Long)].collect()
+    assert(rows.length === 3)
+    rows.foreach { case (a, b, nA, nB, nU, nI, nD) =>
+      val (ua, ub) = (users(a), users(b))
+      val union = ua.union(ub).size
+      // a pair's estimate counts the sampled hashes of A ∪ B that
+      // fall in X, so its standard error is √((1−p)/(k·p)), p = |X|/|A∪B|
+      def pairSe(x: Int): Double = {
+        val p = x.toDouble / union
+        math.sqrt((1 - p) / (k * p))
+      }
+      val (inter, diff) = (ua.intersect(ub).size, ua.diff(ub).size)
+      assert(inter > 0 && diff > 0)
+      within(s"|$a|", nA, ua.size, 1 / math.sqrt(k))
+      within(s"|$b|", nB, ub.size, 1 / math.sqrt(k))
+      within(s"|$a ∪ $b|", nU, union, 1 / math.sqrt(k))
+      within(s"|$a ∩ $b|", nI, inter, pairSe(inter))
+      within(s"|$a \\ $b|", nD, diff, pairSe(diff))
+    }
+    assert(rows.exists { case (a, _, nA, _, _, _, _) => nA != users(a).size },
+      "every single-type estimate is exact: the sketches never left exact mode")
+  }
+
+  test("sketch_theta_ops: a missing pinned event type fails by name") {
+    val raw = graft.util.Tables.eventsRaw(spark, sf)
+    def derived(name: String, keep: org.apache.spark.sql.Column): String = {
+      val dir = graft.util.ScratchIndex.dir(name).toString
+      raw.filter(keep).write.mode("overwrite").parquet(s"$dir/events.parquet")
+      dir
+    }
+    def failure(dir: String): String = {
+      // building the plan must not throw: the check runs inside it
+      val df = Skew.thetaOps(spark, dir)
+      val e = intercept[Exception](df.collect())
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .flatMap(t => Option(t.getMessage)).mkString(" | ")
+    }
+    val noSignup = failure(derived("theta_no_signup", $"event_type" =!= "signup"))
+    assert(noSignup.contains("pinned event type 'signup' has no events"),
+      noSignup)
+    val empty = failure(derived("theta_no_events", lit(false)))
+    assert(empty.contains("pinned event type"), empty)
+  }
+
+  test("sketch_theta_ops is one plan: no job to build, one events scan, " +
+      "built-in sketches") {
+    Skew.thetaOps(spark, sf)
+    val (df, jobs) = jobsStartedBy(Skew.thetaOps(spark, sf))
+    assert(jobs === 0, "building sketch_theta_ops started Spark jobs")
+    assert(df.collect().length === 3)
+    val plan = df.queryExecution.executedPlan
+    val scans = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(plan) {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+      }
+    assert(scans.length === 1, s"events should be scanned once:\n$plan")
+    val shown = plan.toString
+    assert(shown.contains("theta_sketch_agg"), shown)
+    assert(!shown.contains("ScalaUDAF"), shown)
+  }
+
   test("CBO join reorder: stats move the selective dimension innermost") {
     val db = Skew.cboStatsDb(spark, sf)
     // leaf order of a left-deep join tree, reading the plan top-down:
@@ -161,11 +245,11 @@ class SkewSketchSpec extends SparkTestBase {
     }
     // reaggregability: the daily-merge path must agree with a direct
     // whole-window sketch to within twice the single-sketch bound
-    val kllAgg = udaf(graft.functions.KllQuantiles.SketchAgg)
-    val q = udf(graft.functions.KllQuantiles.quantile _)
     val direct = spark.read.parquet(s"$dir/events.parquet")
-      .groupBy($"event_type").agg(kllAgg($"value").as("sk"))
-      .select($"event_type", q($"sk", lit(0.5)).as("p50"))
+      .groupBy($"event_type")
+      .agg(kll_sketch_agg_double($"value", Skew.KllK).as("sk"))
+      .select($"event_type",
+        kll_sketch_get_quantile_double($"sk", lit(0.5)).as("p50"))
       .as[(String, Double)].collect().toMap
     r.foreach { case (t, p50, _, _) =>
       val sorted = byType(t)

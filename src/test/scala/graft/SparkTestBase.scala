@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.lit
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,6 +22,35 @@ trait SparkTestBase extends AnyFunSuite {
   def deltasFor(registered: Delta): Seq[Delta] = Seq(registered,
     Delta(lit(false), "empty", broadcast = false),
     Delta(lit(true), "all", broadcast = false))
+
+  /** `body`'s result and the Spark jobs it starts on this thread: its
+    * jobs carry a fresh job group, and a marker job started after it
+    * proves the listener has seen all of them (the bus delivers in
+    * order).
+    */
+  def jobsStartedBy[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"counted-${java.util.UUID.randomUUID()}"
+    val jobs = new AtomicInteger
+    val marker = new CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet(): Unit
+          case Some(g) if g == s"$group-end" => marker.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "counted")
+      val result = body
+      sc.setJobGroup(s"$group-end", "marker")
+      spark.range(1).count()
+      assert(marker.await(60, TimeUnit.SECONDS), "marker job never reported")
+      (result, jobs.get)
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
+  }
 }
 
 object SparkTestBase {
