@@ -18,12 +18,16 @@ object SparkEntry {
     * shape of the reference's recommendation pipeline B
     * (recommender.py:146-176) on the driver testdata.
     */
-  def entry(spark: SparkSession): DataFrame =
+  def entry(spark: SparkSession): DataFrame = {
+    plans.GraftStrategies.ensure(spark)
     ops.Relational.topK(spark, "/root/testdata/sf0.001")
+  }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2; each first
+    * installs graft's planner strategies on the session it is given.
+    */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    ops.Relational.queries ++ ops.Relational2.queries ++
+    (ops.Relational.queries ++ ops.Relational2.queries ++
       ops.Relational3.queries ++ ops.TextAnalysis.queries ++
       ops.Curation.queries ++
       ops.Dedup.queries ++ ops.Similarity.queries ++ ops.Events.queries ++
@@ -31,7 +35,8 @@ object SparkEntry {
       ops.Multimodal.queries ++ ops.Udfs.queries ++ ops.Skew.queries ++
       sources.Sources.queries ++
       streaming.EventStream.queries ++ streaming.DedupStream.queries ++
-      recommend.AlsPipeline.queries
+      recommend.AlsPipeline.queries).map { case (name, f) =>
+        name -> { (s, d) => plans.GraftStrategies.ensure(s); f(s, d) } }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops

@@ -84,6 +84,7 @@ class GraftExtensions
     extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => FuseDotProduct)
+    graft.plans.GraftStrategies.all.foreach(st => e.injectPlannerStrategy(_ => st))
     GraftSqlFunctions.all.foreach { case (name, builder) =>
       e.injectFunction((
         org.apache.spark.sql.catalyst.FunctionIdentifier(name),

@@ -125,9 +125,7 @@ object GroupedTopKApi {
     */
   def topKPerKey(s: SparkSession, df: DataFrame, groupCols: Seq[String],
       orderCol: String, tieCol: String, k: Int): DataFrame = {
-    if (!s.experimental.extraStrategies.contains(GroupedTopKStrategy))
-      s.experimental.extraStrategies =
-        s.experimental.extraStrategies :+ GroupedTopKStrategy
+    GraftStrategies.ensure(s)
     val plan = GraftColumnBridge.logicalPlan(df)
     val resolve = plan.output.map(a => a.name -> a).toMap
     GraftColumnBridge.ofRows(s, GroupedTopK(

@@ -83,16 +83,47 @@ class PlanQualitySpec extends SparkTestBase {
   test("cube/rollup expand to a single shuffle, not one per grouping set") {
     val p = plan(Relational3.cubeAgg(spark, sf))
     assert(p.contains("Expand"), p)
-    // exchanges: one for the agg, one for the final orderBy — never 4
+    // exchanges: one for the agg, at most one for the final orderBy
+    // (none once the result is small enough to sort in one task) — never 4
     assert("Exchange".r.findAllIn(p).length <= 2,
       s"cube should not shuffle per grouping set:\n$p")
+  }
+
+  test("a small result sorts in one task; a large one keeps the range exchange") {
+    // rel_rollup's presentation ORDER BY over a handful of rollup rows: below
+    // the broadcast threshold it is a local sort over one coalesced
+    // partition, so the range partitioner's sampling job and the range
+    // shuffle's map stage are both gone from collect()
+    def collected(): (String, Int) = {
+      val df = graft.ops.Relational2.rollupAgg(spark, sf)
+      val (_, jobs) = jobsStartedBy(df.collect())
+      (df.queryExecution.executedPlan.toString
+        .split("== Initial Plan ==").head, jobs)
+    }
+    collected() // first touch: schema and file listing
+    val (small, smallJobs) = collected()
+    assert(!small.contains("rangepartitioning"), small)
+    assert(small.contains("Coalesce 1") && small.contains("], false, 0"), small)
+    // a 1-byte threshold stands in for a result too large to broadcast
+    // (the 100 TB path); -1 turns the rule off like broadcast joins
+    for (threshold <- Seq("1", "-1")) {
+      val (large, largeJobs) = graft.util.Confs.withConfs(spark)(
+        "spark.sql.autoBroadcastJoinThreshold" -> threshold)(collected())
+      assert(large.contains("Exchange rangepartitioning"),
+        s"threshold $threshold lost the range exchange:\n$large")
+      assert("Sort \\[[^\n]*\\], true, 0".r.findFirstIn(large).isDefined,
+        s"threshold $threshold lost the global sort:\n$large")
+      if (threshold == "1") assert(largeJobs - smallJobs === 2,
+        s"jobs: $largeJobs with the range sort vs $smallJobs without")
+    }
   }
 
   test("SCD2 build: both window passes share one shuffle") {
     val p = plan(Relational3.scd2(spark, sf))
     // lag-mark and lead-close use the same (custkey, date, key)
     // partitioning — a second exchange means the windows diverged
-    // (the final orderBy adds the only other exchange)
+    // (the final orderBy's range exchange, when the result is too large
+    // to sort in one task, is the only other exchange)
     assert("Exchange hashpartitioning".r.findAllIn(p).length === 1,
       s"SCD2 windows should reuse one hash exchange:\n$p")
   }
@@ -236,7 +267,8 @@ class PlanQualitySpec extends SparkTestBase {
     val df = graft.ops.Events.secondarySort(spark, sf)
     val p = plan(df)
     // exactly one user_id exchange feeds the within-partition sort;
-    // the final presentation orderBy is the only other exchange
+    // the final presentation orderBy's range exchange (absent when the
+    // result is small enough to sort in one task) is the only other one
     assert("Exchange hashpartitioning\\(user_id".r.findAllIn(p).length == 1,
       s"expected one user_id exchange:\n$p")
     assert(p.contains("MapPartitions"), p)

@@ -187,7 +187,8 @@ class SourcesSpec extends SparkTestBase {
     val df = Sources.bucketedJoin(spark, sf)
     assert(df.count() > 0)
     // the bucketed join must not re-shuffle on the join key: the only
-    // allowed exchange is the final orderBy's range repartition
+    // allowed exchange is the final orderBy's range repartition, which a
+    // result small enough to sort in one task does without
     val plan = df.queryExecution.executedPlan.toString()
     assert(!plan.contains("Exchange hashpartitioning"),
       s"unexpected hash exchange in bucketed join plan:\n$plan")

@@ -68,6 +68,8 @@ object SparkTestBase {
       .config("spark.sql.maxMetadataStringLength", "2000")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    // specs call the ops functions directly, not through SparkEntry
+    graft.plans.GraftStrategies.ensure(s)
     s
   }
 }
