@@ -1,13 +1,19 @@
 package graft.ops
 
+import scala.collection.mutable
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.util.{Delta, LoopScope}
 import graft.util.Tables._
 
-/** Graph analytics over relations (no GraphX dependency — the
-  * DataFrame join formulation IS the scalable one: every step is an
-  * equi-join Catalyst can plan, broadcast, and AQE-tune).
+/** Graph analytics over relations (no GraphX dependency). The
+  * one-shot queries are DataFrame equi-joins Catalyst can plan,
+  * broadcast and AQE-tune. An iterative loop pays that planning on
+  * every round, so the BFS walk runs as a co-partitioned RDD loop
+  * instead: the adjacency list is partitioned once and each hop is one
+  * shuffle and one job ([[bfsWalk]]).
   *
   * Cyclic label propagation (connected components) lives in
   * Dedup.dedupClusters; this file holds the join-shaped graph
@@ -129,18 +135,15 @@ object Graph {
     * (vertices with id <= 5) over the undirected co-purchase graph,
     * capped at [[MaxHops]]. The propagation primitive behind
     * link-graph curation (seed-quality expansion, spam-distance
-    * labeling) expressed as the scalable join iteration: each hop is
-    * ONE frontier⋈edges equi-join + distinct + anti-join against the
-    * visited set — no vertex ever carries more than its (id, dist)
-    * pair, so a hop shuffles O(frontier × avg-degree) rows regardless
-    * of graph size, and the hop count (not the corpus) bounds the
-    * number of shuffles. Per-level frontiers are persisted (each is
-    * consumed by the next join AND the growing visited union) and the
-    * whole loop runs inside a ScratchIndex.materialize thunk — the
-    * converged distance table is written once per corpus, distributed,
-    * and re-read thereafter (the dedupClusters discipline; BFS output
-    * is a derived index a pipeline queries many times). Distances are
-    * exact integers — no float-tie surface.
+    * labeling), run as the co-partitioned frontier loop of
+    * [[bfsWalk]]: no vertex ever carries more than its (id, dist)
+    * pair, a hop shuffles O(frontier × avg-degree) rows regardless of
+    * graph size, and the hop count (not the corpus) bounds the number
+    * of shuffles. The whole loop runs inside a ScratchIndex.materialize
+    * thunk — the converged distance table is written once per corpus,
+    * distributed, and re-read thereafter (the dedupClusters
+    * discipline; BFS output is a derived index a pipeline queries many
+    * times). Distances are exact integers — no float-tie surface.
     */
   def bfsHops(s: SparkSession, d: String): DataFrame =
     LoopScope.scoped { sc =>
@@ -157,41 +160,69 @@ object Graph {
       }
     }.orderBy("v")
 
-  /** The BFS join-iteration itself: returns the converged (v, dist)
+  /** The BFS frontier loop itself: returns the converged (v, dist)
     * relation and the per-hop frontier sizes (hop 0 = seeds); its
-    * caches are pinned in `sc`. Each frontier is counted once — a
-    * cheap action on a frame the next join needs materialized
-    * anyway — which both publishes the frontier-bound measurement and
-    * lets the loop SHORT-CIRCUIT when the frontier empties
-    * (diameter < cap), instead of planning empty join rounds.
+    * caches are pinned in `sc`.
+    *
+    * An RDD loop, not a DataFrame one: the adjacency list (both
+    * orientations of every edge, from one scan) is hash-partitioned
+    * ONCE with `spark.sql.shuffle.partitions` partitions, indexed per
+    * partition (vertex → neighbours) and pinned, and every frontier
+    * and the visited union share that partitioner. So a hop is a
+    * narrow neighbour lookup of each frontier vertex in its own
+    * partition's index, one `reduceByKey` (the hop's only shuffle,
+    * O(frontier × avg-degree) rows, deduped map-side) and a narrow
+    * anti-join against the visited union — one Spark job per hop, with
+    * no per-hop analysis, AQE re-planning or code generation. The
+    * trade: the edge list is shuffled once up front (2 × |E| rows),
+    * where the join formulation re-scanned it every hop and, past the
+    * broadcast threshold, shuffled it every hop. Each frontier is
+    * counted once — the hop's one job — which both publishes the
+    * frontier-bound measurement and lets the loop SHORT-CIRCUIT when
+    * the frontier empties (diameter < cap).
     */
   private[graft] def bfsWalk(sc: LoopScope, s: SparkSession, d: String)
       : (DataFrame, Seq[Long]) = {
-    // undirected walk over canonical (p1 < p2) edges
-    val e = symmetric(coOrderEdges(s, d), "a", "b")
-    var frontier = sc.pin(e.select(col("a").as("v")).distinct()
-      .filter(col("v") <= 5))
-    val counts = scala.collection.mutable.ArrayBuffer(frontier.count())
-    var visited = frontier.withColumn("dist", lit(0L))
+    val p = new HashPartitioner(s.sessionState.conf.numShufflePartitions)
+    // one element per partition: each vertex of the partition mapped to
+    // its neighbours, so a hop looks up its frontier and never scans or
+    // re-hashes the rest of the edge list
+    val adj = sc.pinRdd(coOrderEdges(s, d)
+      .filter(col("p1").isNotNull && col("p2").isNotNull).rdd
+      .flatMap { r =>
+        val (a, b) = (r.getLong(0), r.getLong(1))
+        Iterator((a, b), (b, a))
+      }
+      .partitionBy(p)
+      .mapPartitions({ it =>
+        val m = mutable.LongMap.empty[mutable.ArrayBuilder.ofLong]
+        it.foreach { case (a, b) =>
+          m.getOrElseUpdate(a, new mutable.ArrayBuilder.ofLong) += b }
+        Iterator.single(m.mapValuesNow(_.result()))
+      }, preservesPartitioning = true))
+    // a frontier row is (v, the hop that reached it); frontier partition
+    // i holds the vertices `p` sends to i, so it zips with adj's i
+    var frontier: RDD[(Long, Long)] = sc.pinRdd(adj.mapPartitions(
+      _.next().keys.iterator.filter(_ <= 5L).map((_, 0L)),
+      preservesPartitioning = true))
+    val levels = mutable.ArrayBuffer(frontier)
+    val counts = mutable.ArrayBuffer(frontier.count())
     var h = 1
     while (h <= MaxHops && counts.last > 0L) {
-      // the new frontier is lineage-truncated before it feeds BOTH the
-      // next hop's join and the growing visited union: without that,
-      // hop h's plan embeds hop h-1's full join tree on the frontier
-      // side AND every prior hop's tree through the visited union —
-      // the r17 BFS round-plan dump was ~35k lines by the last hop,
-      // all planning cost, none of it computation (the data is cached)
-      frontier = sc.next(frontier.join(e, frontier("v") === e("a"))
-        .select(col("b").as("v")).distinct()
-        .join(visited.select(col("v")), Seq("v"), "left_anti"))
+      val hop = h.toLong
+      val visited = s.sparkContext.union(levels.toSeq)
+      frontier = sc.pinRdd(frontier.zipPartitions(adj) { (f, a) =>
+          val nbrs = a.next()
+          f.flatMap { case (v, _) => nbrs(v) }.map((_, hop))
+        }
+        .reduceByKey(p, (x, _) => x)
+        .subtractByKey(visited, p))
       counts += frontier.count()
-      if (counts.last > 0L) {
-        visited = visited
-          .unionByName(frontier.withColumn("dist", lit(h.toLong)))
-      }
+      if (counts.last > 0L) levels += frontier
       h += 1
     }
-    (visited, counts.toSeq)
+    (s.createDataFrame(s.sparkContext.union(levels.toSeq)).toDF("v", "dist"),
+      counts.toSeq)
   }
 
   /** Recursive-CTE replay: UNION (not UNION ALL) semantics dedup the

@@ -118,4 +118,26 @@ class LineageTruncationSpec extends SparkTestBase {
     assert(cm.isEmpty === wasEmpty)
     assert(persisted === before)
   }
+
+  test("LoopScope unpersists the RDDs bfsWalk pins, on return and on throw") {
+    def persisted = spark.sparkContext.getPersistentRDDs
+    val before = persisted.keySet
+    LoopScope.scoped { sc =>
+      val (_, counts) = graft.ops.Graph.bfsWalk(sc, spark, sf)
+      // the adjacency list and every counted frontier
+      val pinned = persisted -- before
+      assert(pinned.size === counts.size + 1)
+      pinned.values.foreach(r =>
+        assert(r.getStorageLevel === StorageLevel.MEMORY_AND_DISK))
+    }
+    assert(persisted.keySet === before)
+    intercept[IllegalStateException] {
+      LoopScope.scoped { sc =>
+        graft.ops.Graph.bfsWalk(sc, spark, sf)
+        assert(persisted.size > before.size)
+        throw new IllegalStateException("build failed after the walk")
+      }
+    }
+    assert(persisted.keySet === before)
+  }
 }
