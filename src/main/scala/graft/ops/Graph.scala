@@ -2,7 +2,6 @@ package graft.ops
 
 import scala.collection.mutable
 import org.apache.spark.HashPartitioner
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.util.{Delta, LoopScope}
@@ -137,13 +136,15 @@ object Graph {
     * link-graph curation (seed-quality expansion, spam-distance
     * labeling), run as the co-partitioned frontier loop of
     * [[bfsWalk]]: no vertex ever carries more than its (id, dist)
-    * pair, a hop shuffles O(frontier × avg-degree) rows regardless of
-    * graph size, and the hop count (not the corpus) bounds the number
-    * of shuffles. The whole loop runs inside a ScratchIndex.materialize
-    * thunk — the converged distance table is written once per corpus,
-    * distributed, and re-read thereafter (the dedupClusters
-    * discipline; BFS output is a derived index a pipeline queries many
-    * times). Distances are exact integers — no float-tie surface.
+    * pair, a hop's one shuffle carries O(frontier × avg-degree) rows,
+    * and the hop count bounds the number of hop shuffles. The build
+    * adds one up-front shuffle of the 2 × |E| adjacency rows, so its
+    * cost is linear in the edge list, not bounded by the seed ball.
+    * The whole loop runs inside a ScratchIndex.materialize thunk — the
+    * converged distance table is written once per corpus, distributed,
+    * and re-read thereafter (the dedupClusters discipline; BFS output
+    * is a derived index a pipeline queries many times). Distances are
+    * exact integers — no float-tie surface.
     */
   def bfsHops(s: SparkSession, d: String): DataFrame =
     LoopScope.scoped { sc =>
@@ -166,55 +167,44 @@ object Graph {
     *
     * An RDD loop, not a DataFrame one: the adjacency list (both
     * orientations of every edge, from one scan) is hash-partitioned
-    * ONCE with `spark.sql.shuffle.partitions` partitions, indexed per
-    * partition (vertex → neighbours) and pinned, and every frontier
-    * and the visited union share that partitioner. So a hop is a
-    * narrow neighbour lookup of each frontier vertex in its own
-    * partition's index, one `reduceByKey` (the hop's only shuffle,
-    * O(frontier × avg-degree) rows, deduped map-side) and a narrow
-    * anti-join against the visited union — one Spark job per hop, with
-    * no per-hop analysis, AQE re-planning or code generation. The
-    * trade: the edge list is shuffled once up front (2 × |E| rows),
-    * where the join formulation re-scanned it every hop and, past the
-    * broadcast threshold, shuffled it every hop. Each frontier is
-    * counted once — the hop's one job — which both publishes the
-    * frontier-bound measurement and lets the loop SHORT-CIRCUIT when
-    * the frontier empties (diameter < cap).
+    * ONCE with `spark.sql.shuffle.partitions` partitions and pinned,
+    * and every frontier and the visited union share its partitioner.
+    * So a hop is a narrow `join` of the frontier with the adjacency,
+    * one `reduceByKey` (the hop's only shuffle, O(frontier ×
+    * avg-degree) rows, deduped map-side) and a narrow `subtractByKey`
+    * against the visited union — one Spark job per hop, with no
+    * per-hop analysis, AQE re-planning or code generation. The narrow
+    * join is a cogroup over the whole pinned adjacency partition; its
+    * map spills like any shuffle aggregation, so no partition has to
+    * fit in memory. The trade: the edge list is shuffled once up front
+    * (2 × |E| rows), where the join formulation re-scanned it every
+    * hop and, past the broadcast threshold, shuffled it every hop.
+    * Each frontier is counted once — the hop's one job — which both
+    * publishes the frontier-bound measurement and lets the loop
+    * SHORT-CIRCUIT when the frontier empties (diameter < cap).
     */
   private[graft] def bfsWalk(sc: LoopScope, s: SparkSession, d: String)
       : (DataFrame, Seq[Long]) = {
     val p = new HashPartitioner(s.sessionState.conf.numShufflePartitions)
-    // one element per partition: each vertex of the partition mapped to
-    // its neighbours, so a hop looks up its frontier and never scans or
-    // re-hashes the rest of the edge list
     val adj = sc.pinRdd(coOrderEdges(s, d)
       .filter(col("p1").isNotNull && col("p2").isNotNull).rdd
       .flatMap { r =>
         val (a, b) = (r.getLong(0), r.getLong(1))
         Iterator((a, b), (b, a))
       }
-      .partitionBy(p)
-      .mapPartitions({ it =>
-        val m = mutable.LongMap.empty[mutable.ArrayBuilder.ofLong]
-        it.foreach { case (a, b) =>
-          m.getOrElseUpdate(a, new mutable.ArrayBuilder.ofLong) += b }
-        Iterator.single(m.mapValuesNow(_.result()))
-      }, preservesPartitioning = true))
-    // a frontier row is (v, the hop that reached it); frontier partition
-    // i holds the vertices `p` sends to i, so it zips with adj's i
-    var frontier: RDD[(Long, Long)] = sc.pinRdd(adj.mapPartitions(
-      _.next().keys.iterator.filter(_ <= 5L).map((_, 0L)),
-      preservesPartitioning = true))
+      .partitionBy(p))
+    // a frontier row is (v, the hop that reached it); adj already has
+    // partitioner p, so this reduceByKey dedups the seeds without a shuffle
+    var frontier = sc.pinRdd(adj.filter(_._1 <= 5L).mapValues(_ => 0L)
+      .reduceByKey(p, (x, _) => x))
     val levels = mutable.ArrayBuffer(frontier)
     val counts = mutable.ArrayBuffer(frontier.count())
     var h = 1
     while (h <= MaxHops && counts.last > 0L) {
       val hop = h.toLong
       val visited = s.sparkContext.union(levels.toSeq)
-      frontier = sc.pinRdd(frontier.zipPartitions(adj) { (f, a) =>
-          val nbrs = a.next()
-          f.flatMap { case (v, _) => nbrs(v) }.map((_, hop))
-        }
+      frontier = sc.pinRdd(frontier.join(adj, p)
+        .map { case (_, (_, b)) => (b, hop) }
         .reduceByKey(p, (x, _) => x)
         .subtractByKey(visited, p))
       counts += frontier.count()
