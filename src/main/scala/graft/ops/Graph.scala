@@ -166,45 +166,52 @@ object Graph {
     * caches are pinned in `sc`.
     *
     * An RDD loop, not a DataFrame one: the adjacency list (both
-    * orientations of every edge, from one scan) is hash-partitioned
-    * ONCE with `spark.sql.shuffle.partitions` partitions and pinned,
-    * and every frontier and the visited union share its partitioner.
-    * So a hop is a narrow `join` of the frontier with the adjacency,
-    * one `reduceByKey` (the hop's only shuffle, O(frontier ×
-    * avg-degree) rows, deduped map-side) and a narrow `subtractByKey`
-    * against the visited union — one Spark job per hop, with no
-    * per-hop analysis, AQE re-planning or code generation. The narrow
-    * join is a cogroup over the whole pinned adjacency partition; its
-    * map spills like any shuffle aggregation, so no partition has to
-    * fit in memory. The trade: the edge list is shuffled once up front
-    * (2 × |E| rows), where the join formulation re-scanned it every
-    * hop and, past the broadcast threshold, shuffled it every hop.
-    * Each frontier is counted once — the hop's one job — which both
-    * publishes the frontier-bound measurement and lets the loop
-    * SHORT-CIRCUIT when the frontier empties (diameter < cap).
+    * orientations of every edge, from one scan) is grouped ONCE into
+    * one (vertex, neighbours) record per vertex, hash-partitioned with
+    * `spark.sql.shuffle.partitions` partitions and pinned, and every
+    * frontier and the visited union share its partitioner. So a hop
+    * is a narrow pass of each adjacency partition past its frontier
+    * partition's keys, one `reduceByKey` (the hop's only shuffle,
+    * O(frontier × avg-degree) rows, deduped map-side) and a narrow
+    * `subtractByKey` against the visited union — one Spark job per
+    * hop, with no per-hop analysis, AQE re-planning or code
+    * generation. A hop reads |V| pinned records, where the join
+    * formulation scanned all |E| edges. The trade: the edge list is
+    * shuffled once up front (2 × |E| rows), where the join formulation
+    * shuffled only O(frontier × avg-degree) rows per hop while the
+    * frontier stayed under the broadcast threshold. Each frontier is
+    * counted once — the hop's one job — which both publishes the
+    * frontier-bound measurement and lets the loop SHORT-CIRCUIT when
+    * the frontier empties (diameter < cap).
     */
   private[graft] def bfsWalk(sc: LoopScope, s: SparkSession, d: String)
       : (DataFrame, Seq[Long]) = {
     val p = new HashPartitioner(s.sessionState.conf.numShufflePartitions)
+    // one record per vertex, its neighbours a primitive array: the
+    // pinned index holds |V| records of 8 bytes per edge end, and both
+    // the grouping and the cache spill record by record
     val adj = sc.pinRdd(coOrderEdges(s, d)
       .filter(col("p1").isNotNull && col("p2").isNotNull).rdd
       .flatMap { r =>
         val (a, b) = (r.getLong(0), r.getLong(1))
         Iterator((a, b), (b, a))
       }
-      .partitionBy(p))
-    // a frontier row is (v, the hop that reached it); adj already has
-    // partitioner p, so this reduceByKey dedups the seeds without a shuffle
-    var frontier = sc.pinRdd(adj.filter(_._1 <= 5L).mapValues(_ => 0L)
-      .reduceByKey(p, (x, _) => x))
+      .groupByKey(p).mapValues(_.toArray))
+    // a frontier row is (v, the hop that reached it)
+    var frontier = sc.pinRdd(adj.filter(_._1 <= 5L).mapValues(_ => 0L))
     val levels = mutable.ArrayBuffer(frontier)
     val counts = mutable.ArrayBuffer(frontier.count())
     var h = 1
     while (h <= MaxHops && counts.last > 0L) {
       val hop = h.toLong
       val visited = s.sparkContext.union(levels.toSeq)
-      frontier = sc.pinRdd(frontier.join(adj, p)
-        .map { case (_, (_, b)) => (b, hop) }
+      // partition i of both sides holds the vertices p sends to i; the
+      // frontier's keys are the hash side and the adjacency streams
+      // past them, so a hop holds O(frontier) in memory
+      frontier = sc.pinRdd(frontier.zipPartitions(adj) { (f, a) =>
+          val keys = f.map(_._1).toSet
+          a.filter(va => keys(va._1)).flatMap(_._2).map((_, hop))
+        }
         .reduceByKey(p, (x, _) => x)
         .subtractByKey(visited, p))
       counts += frontier.count()
