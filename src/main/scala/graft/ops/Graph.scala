@@ -71,7 +71,7 @@ object Graph {
         col("p2") === col("v")).drop("v")
       .select(graft.functions.SetSimilarityFunctions
         .sorted_long_intersect(col("na"), col("nb")).as("closes"))
-      .agg(sum(col("closes")).as("n_triangles"))
+      .agg(coalesce(sum(col("closes")), lit(0L)).as("n_triangles"))
     val stats = e.agg(
       count(lit(1)).as("n_edges"),
       countDistinct(col("p1")).as("n_left_vertices"),

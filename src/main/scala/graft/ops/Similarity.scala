@@ -3,28 +3,34 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.functions.VectorFunctions.{cosine_sim, nearest_centroids}
 import graft.util.Delta
 import graft.util.Tables._
 
 /** Similarity search over the `embeddings` table
-  * (`embedding: array<float>`, 64-dim).
+  * (`embedding: array<float>`, 64-dim). Thirteen operators:
   *
-  *  - `knnBruteForce`: exact cosine top-k — broadcast the (small)
-  *    query set against the full corpus; ONE pass over the corpus,
-  *    per-partition top-k via window rank. This is the oracle-checked
-  *    baseline and also the right plan when |queries| is small: at
-  *    100 TB the corpus scan is embarrassingly parallel and nothing
-  *    but (query_id, vec_id, sim) ever shuffles.
-  *  - `annLsh`: sign-random-projection LSH — each vector hashes to a
-  *    bucket of sign bits from deterministic hyperplanes; candidates
-  *    only join within a bucket. The 100-TB path when |queries| is
-  *    large: cost follows candidate volume, not corpus².
-  *  - `embedStats`: per-label norms/centroid distances — grouped agg
-  *    over array columns with higher-order functions.
+  *  - exact search: `knnBruteForce` (cosine top-5; the small query
+  *    set broadcast against ONE pass over the corpus, the
+  *    oracle-checked baseline) and `knnFiltered` (the same behind a
+  *    label pre-filter);
+  *  - approximate top-3 for 20 queries: `annLsh` (sign-random-
+  *    projection buckets), `annIvf` (k-means posting lists),
+  *    `annIvfIncremental` (the IVF index maintained by daily deltas),
+  *    `annPq` (product-quantized codes), `annIvfPq` (codes inside
+  *    posting lists) and `annGraph` (a bounded-degree kNN graph
+  *    seeded by IVF probes);
+  *  - embedding-space diagnostics: `embedStats` (per-label norms),
+  *    `quantizeInt8` (int8 codes and their error) and
+  *    `centroidClassify` (nearest label mean, as a confusion matrix);
+  *  - dedup: `embCosinePairs` (the 100 most similar pairs of a block)
+  *    and `semanticDedup` (SemDeDup within label clusters).
   *
-  * All dot products fold left-to-right in both engines (Spark
-  * `aggregate` vs DuckDB `list_`*), so doubles match bitwise and
-  * round(…, 6) hash-compares exactly.
+  * Two kernels serve them: [[topKByCosine]] is every exact top-k
+  * ranking, and [[lloyd]] trains both the IVF quantizer and the PQ
+  * codebooks. All dot products fold left-to-right in both engines
+  * (Spark `aggregate` vs DuckDB `list_`*), so doubles match bitwise
+  * and round(…, 6) hash-compares exactly.
   */
 object Similarity {
 
@@ -36,38 +42,58 @@ object Similarity {
 
   private def asDouble(c: Column): Column = transform(c, x => x.cast("double"))
 
+  /** The (vec_id, v) relation every index and query reads: the
+    * embeddings with their float32 elements widened to double.
+    */
+  private[graft] def embRelation(s: SparkSession, d: String): DataFrame =
+    embeddings(s, d)
+      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
+
+  /** Exact cosine top-k per query: scores `(q_id, vec_id, q, v)` pairs
+    * by the cosine ROUNDED at 6 dp, ranks each q_id's candidates by
+    * (cos_sim DESC, vec_id) — the cross-engine determinism rule — and
+    * keeps rank <= k, as the columns `out` ordered by (q_id, rank).
+    * Columns of `out` other than q_id, vec_id, cos_sim and rank ride
+    * through from `pairs`.
+    */
+  private def topKByCosine(pairs: DataFrame, k: Int,
+      out: Seq[String] = Seq("q_id", "vec_id", "cos_sim", "rank")): DataFrame = {
+    val carry = out.filterNot(Set("q_id", "vec_id", "cos_sim", "rank"))
+    val w = Window.partitionBy(col("q_id"))
+      .orderBy(desc("cos_sim"), asc("vec_id"))
+    pairs.select((Seq("q_id", "vec_id") ++ carry).map(col) :+
+        round(cosine_sim(col("q"), col("v")), 6).as("cos_sim"): _*)
+      .withColumn("rank", row_number().over(w).cast("long"))
+      .filter(col("rank") <= k)
+      .select(out.map(col): _*)
+      .orderBy("q_id", "rank")
+  }
+
+  /** DuckDB's replay of the engine's 6-dp-rounded cosine. */
+  private def cosSql(a: String, b: String): String =
+    s"round(list_dot_product($a, $b) / (sqrt(list_dot_product($a, $a))" +
+      s" * sqrt(list_dot_product($b, $b))), 6)"
+
   /** Exact cosine top-5 neighbors for query vectors vec_id < 5.
     * Query side is broadcast; ranking uses the ROUNDED similarity with
     * vec_id tie-break for cross-engine determinism.
     */
   def knnBruteForce(s: SparkSession, d: String): DataFrame = {
-    val emb = embeddings(s, d)
-      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
+    val emb = embRelation(s, d)
     val queries = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("v").as("q"))
-    val scored = emb.crossJoin(broadcast(queries))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        round(graft.functions.VectorFunctions.cosine_sim(col("q"), col("v")), 6)
-          .as("cos_sim"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(desc("cos_sim"), asc("vec_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 5)
-      .select(col("q_id"), col("rank"), col("vec_id"), col("cos_sim"))
-      .orderBy("q_id", "rank")
+    topKByCosine(emb.crossJoin(broadcast(queries))
+      .filter(col("vec_id") =!= col("q_id")), 5,
+      Seq("q_id", "rank", "vec_id", "cos_sim"))
   }
 
   val knnBruteForceSql: String =
-    """WITH e AS (
+    s"""WITH e AS (
       |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
       |), q AS (
       |  SELECT vec_id AS q_id, v AS q FROM e WHERE vec_id < 5
       |), scored AS (
-      |  SELECT q_id, vec_id,
-      |         round(list_dot_product(q, v)
-      |               / (sqrt(list_dot_product(q, q)) * sqrt(list_dot_product(v, v))),
-      |               6) AS cos_sim
+      |  SELECT q_id, vec_id, ${cosSql("q", "v")} AS cos_sim
       |  FROM e CROSS JOIN q WHERE vec_id <> q_id
       |), ranked AS (
       |  SELECT q_id, vec_id, cos_sim,
@@ -128,8 +154,7 @@ object Similarity {
         (0 until dim).map(i => planeWeight(t * NumPlanes + p, i))))
       graft.functions.VectorFunctions.sign_bucket(col("v"), planes)
     }
-    val emb = embeddings(s, d)
-      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
+    val emb = embRelation(s, d)
     val bands = emb.select(col("vec_id"),
       posexplode(array(tableBuckets: _*)).as(Seq("tbl", "bucket")))
     val qBands = bands.filter(col("vec_id") < 20)
@@ -140,18 +165,10 @@ object Similarity {
     val cand = bands.join(qBands, Seq("tbl", "bucket"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id")).distinct()
-    val scored = cand
+    topKByCosine(cand
       .join(emb, "vec_id")
       .join(broadcast(emb.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("q_id"), col("v").as("q"))), "q_id")
-      .select(col("q_id"), col("vec_id"),
-        round(graft.functions.VectorFunctions.cosine_sim(col("q"), col("v")), 6)
-          .as("cos_sim"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(desc("cos_sim"), asc("vec_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 3)
-      .orderBy("q_id", "rank")
+        .select(col("vec_id").as("q_id"), col("v").as("q"))), "q_id"), 3)
   }
 
   /** IVF (inverted-file) ANN — the other standard scale path
@@ -162,18 +179,16 @@ object Similarity {
     * candidates exactly.
     *
     * The quantizer is deterministic spherical k-means: init = the
-    * first `IvfK` vectors by vec_id (no RNG state), then Lloyd
-    * rounds where (a) assignment is a SHUFFLE-FREE narrow projection —
-    * the centroids ride into the plan as literals and an
-    * `array_max(array(struct(csim, cent_id)…))` picks the argmax per
-    * row — and (b) the mean recompute is one small groupBy (k×dim
-    * cells to the driver). Centroid coords round to 6 decimals each
-    * round so float-sum order can never leak into the model. Cosine
-    * assignment needs no centroid normalization beyond the constant
-    * norm (cos(q,c) is scale-invariant in c).
+    * first `IvfK` vectors of the training sample by vec_id (no RNG
+    * state), then `IvfIters` driver-side [[lloyd]] rounds over the
+    * collected sample. Assigning the corpus is a SHUFFLE-FREE narrow
+    * projection: the centroids ride into the plan as one literal and
+    * NearestCentroids picks the argmax per row. Cosine assignment
+    * needs no centroid normalization (cos(q,c) is scale-invariant in
+    * c).
     *
     * Cost at scale: training = ONE TakeOrdered selection pass over
-    * the corpus + iters × passes over the cached 2048-row sample
+    * the corpus + one bounded collect of the 2048-row sample
     * ([[trainingSample]]); assignment = one narrow corpus projection;
     * query = sum of probed posting-list sizes, not corpus size.
     */
@@ -184,21 +199,33 @@ object Similarity {
   private val centroidMemo =
     scala.collection.concurrent.TrieMap.empty[String, Array[Array[Double]]]
 
-  /** Nearest-centroid id column for the row's vector column `v`;
-    * centroids enter as one nested-array literal (see
+  /** A centroid matrix as ONE nested-array literal (see
     * functions.NearestCentroids for why that matters for codegen).
     */
+  private def centLit(cents: Array[Array[Double]]): Column =
+    typedLit(cents.map(_.toSeq).toSeq)
+
+  /** Nearest-centroid id column for the row's vector column `v`. */
   private[graft] def bestCentroid(cents: Array[Array[Double]]): Column =
-    element_at(graft.functions.VectorFunctions.nearest_centroids(
-      col("v"), typedLit(cents.map(_.toSeq).toSeq), 1), 1)
+    element_at(nearest_centroids(col("v"), centLit(cents), 1), 1)
+
+  /** The query rows `vec_id < maxQ` of a (vec_id, v) relation as
+    * (q_id, q, cent_id), one row per probed cell: each query's
+    * `IvfProbes` nearest cells, by the same fused expression as
+    * [[bestCentroid]] and again without a shuffle.
+    */
+  private def queryProbes(emb: DataFrame, cents: Array[Array[Double]],
+      maxQ: Long = 20): DataFrame =
+    emb.filter(col("vec_id") < maxQ)
+      .withColumn("cent_id",
+        explode(nearest_centroids(col("v"), centLit(cents), IvfProbes)))
+      .select(col("vec_id").as("q_id"), col("v").as("q"), col("cent_id"))
 
   /** Deterministic k-means centroids for an sf dir (memoized: the
     * model is built once per corpus, exactly like a real IVF index).
     */
   def ivfCentroids(s: SparkSession, d: String): Array[Array[Double]] =
-    centroidMemo.getOrElseUpdate(d, trainIvfCentroids(
-      embeddings(s, d)
-        .select(col("vec_id"), asDouble(col("embedding")).as("v"))))
+    centroidMemo.getOrElseUpdate(d, trainIvfCentroids(embRelation(s, d)))
 
   /** Quantizer/codebook training-sample cap (VERDICT r15 #1). Nobody
     * trains an IVF coarse quantizer or PQ codebooks on a 100 TB
@@ -227,6 +254,16 @@ object Similarity {
     emb.orderBy(xxhash64(col("vec_id")).asc, col("vec_id").asc)
       .limit(TrainSampleN)
 
+  /** The training sample's vectors in vec_id order, collected ONCE:
+    * the Lloyd rounds run driver-side (r18). The sample is
+    * TrainSampleN×64 doubles (~1 MB, bounded by construction), while
+    * each round as a Spark job paid seconds of job/codegen fixed cost
+    * for sub-ms arithmetic.
+    */
+  private def sampleRows(emb: DataFrame): Array[Array[Double]] =
+    trainingSample(emb).orderBy("vec_id")
+      .select("v").collect().map(_.getSeq[Double](0).toArray)
+
   /** Driver-side Lloyd argmax step: the `(-sim, idx)` key
     * [[graft.functions.NearestCentroids]] sorts by, which ranks an
     * underflowed +0.0 above -0.0 (strict `>` would not) and a NaN
@@ -235,55 +272,61 @@ object Similarity {
   private[graft] def beats(sim: Double, bestSim: Double): Boolean =
     java.lang.Double.compare(-sim, -bestSim) < 0
 
-  /** Lloyd training over an arbitrary (vec_id, v) relation — shared by
-    * the full-corpus quantizer above and the base-only (frozen)
-    * quantizer of the incremental path. Trains on the bounded
-    * [[trainingSample]] of the relation (cached, so the Lloyd rounds
-    * iterate over 2048 rows, not the corpus). Init = the first `IvfK`
-    * vectors of the SAMPLE by vec_id, so base-only training is
-    * self-contained (it never peeks at delta rows, exactly like a
-    * quantizer trained before today's batch existed).
+  /** Cosine over the common prefix of two vectors, in
+    * CosineSim.compute's accumulation order, so driver-side training
+    * agrees bitwise with the engine's expression.
     */
-  private def trainIvfCentroids(emb: DataFrame): Array[Array[Double]] = {
-    // ONE bounded collect; the Lloyd rounds run driver-side (r18, the
-    // trainPqCodebooks rationale: the sample is ~1 MB by construction
-    // and each round as a Spark job paid seconds of job/codegen fixed
-    // cost for sub-ms arithmetic). Same assignment (cosine argmax,
-    // lowest index on ties — NearestCentroids' order), same
-    // per-(cent, dim) mean, same 6-dp rounding, empty lists keep
-    // their coords; consumer outputs byte-diffed across scales.
-    val rows = trainingSample(emb).orderBy("vec_id")
-      .select("v").collect().map(_.getSeq[Double](0).toArray)
-    var cents: Array[Array[Double]] = rows.take(IvfK).map(_.clone())
-    val dim = if (rows.nonEmpty) rows(0).length else 0
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      val n = math.min(a.length, b.length)
-      var d0 = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < n) {
-        val x = a(i); val y = b(i)
-        d0 += x * y; na += x * x; nb += y * y
-        i += 1
-      }
-      d0 / (math.sqrt(na) * math.sqrt(nb))
+  private[graft] def cosine(a: Array[Double], b: Array[Double]): Double = {
+    val n = math.min(a.length, b.length)
+    var d0 = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+    while (i < n) {
+      val x = a(i); val y = b(i)
+      d0 += x * y; na += x * x; nb += y * y
+      i += 1
     }
-    for (_ <- 1 to IvfIters) {
-      val sum = Array.ofDim[Double](IvfK, dim)
-      val cnt = new Array[Long](IvfK)
+    d0 / (math.sqrt(na) * math.sqrt(nb))
+  }
+
+  /** The index of the centroid nearest `v` by cosine, in the
+    * NearestCentroids order ([[beats]]): lowest index on ties, and an
+    * all-NaN row degenerates to 0, also like the sort.
+    */
+  private[graft] def nearest(v: Array[Double], cents: Array[Array[Double]]): Int = {
+    var best = 0; var bestSim = Double.NegativeInfinity
+    var c = 0
+    while (c < cents.length) {
+      val sim = cosine(v, cents(c))
+      if (beats(sim, bestSim)) { best = c; bestSim = sim }
+      c += 1
+    }
+    best
+  }
+
+  /** The one k-means kernel: `iters` Lloyd rounds over `rows` from the
+    * centroids `init`. Each round assigns every row to its [[nearest]]
+    * centroid, then moves each centroid to its members' mean, summed
+    * in row order and rounded to 6 dp HALF_UP each round so float-sum
+    * order can never leak into the model; a centroid with no members
+    * keeps its coordinates. The IVF quantizer runs it on the training
+    * sample, the PQ trainer once per subspace on the sample's
+    * sub-slices (PQ training IS per-subspace k-means).
+    */
+  private[graft] def lloyd(rows: Array[Array[Double]],
+      init: Array[Array[Double]], iters: Int): Array[Array[Double]] = {
+    val dim = if (rows.nonEmpty) rows(0).length else 0
+    var cents = init
+    for (_ <- 1 to iters) {
+      val sum = Array.ofDim[Double](cents.length, dim)
+      val cnt = new Array[Long](cents.length)
       rows.foreach { v =>
-        var best = 0; var bestSim = Double.NegativeInfinity
-        var c = 0
-        while (c < cents.length) {
-          val sim = cos(v, cents(c))
-          if (beats(sim, bestSim)) { best = c; bestSim = sim }
-          c += 1
-        }
-        cnt(best) += 1
-        val ss = sum(best)
+        val c = nearest(v, cents)
+        cnt(c) += 1
+        val ss = sum(c)
         var i = 0
         while (i < dim) { ss(i) += v(i); i += 1 }
       }
       cents = Array.tabulate(cents.length) { c =>
-        if (cnt(c) == 0L) cents(c).clone() // empty lists keep coords
+        if (cnt(c) == 0L) cents(c)
         else Array.tabulate(dim) { i =>
           BigDecimal(sum(c)(i) / cnt(c))
             .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
@@ -293,9 +336,20 @@ object Similarity {
     cents
   }
 
+  /** Quantizer training over an arbitrary (vec_id, v) relation —
+    * shared by the full-corpus quantizer above and the base-only
+    * (frozen) quantizer of the incremental path. Init = the first
+    * `IvfK` vectors of the SAMPLE by vec_id, so base-only training is
+    * self-contained (it never peeks at delta rows, exactly like a
+    * quantizer trained before today's batch existed).
+    */
+  private def trainIvfCentroids(emb: DataFrame): Array[Array[Double]] = {
+    val rows = sampleRows(emb)
+    lloyd(rows, rows.take(IvfK), IvfIters)
+  }
+
   def annIvf(s: SparkSession, d: String): DataFrame = {
-    val emb = embeddings(s, d)
-      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
+    val emb = embRelation(s, d)
     val cents = ivfCentroids(s, d)
 
     // posting-list assignment: narrow projection, no shuffle
@@ -312,28 +366,11 @@ object Similarity {
     * came from.
     */
   private[graft] def ivfAnswer(assigned: DataFrame, cents: Array[Array[Double]],
-      emb: DataFrame, maxQ: Long = 20): DataFrame = {
-    // queries probe their nprobe nearest lists — same fused expression
-    // with nprobe > 1, again without a shuffle
-    val qProbe = emb.filter(col("vec_id") < maxQ)
-      .withColumn("cent_id",
-        explode(graft.functions.VectorFunctions.nearest_centroids(
-          col("v"), typedLit(cents.map(_.toSeq).toSeq), IvfProbes)))
-      .select(col("vec_id").as("q_id"), col("v").as("q"), col("cent_id"))
-
+      emb: DataFrame, maxQ: Long = 20): DataFrame =
     // each vector lives in exactly one list and probes are distinct →
     // no dedup needed; the tiny query side broadcasts
-    val cand = assigned.join(broadcast(qProbe), Seq("cent_id"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        round(graft.functions.VectorFunctions.cosine_sim(col("q"), col("v")), 6)
-          .as("cos_sim"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(desc("cos_sim"), asc("vec_id"))
-    cand.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 3)
-      .orderBy("q_id", "rank")
-  }
+    topKByCosine(assigned.join(broadcast(queryProbes(emb, cents, maxQ)), Seq("cent_id"))
+      .filter(col("vec_id") =!= col("q_id")), 3)
 
   /** Incremental IVF index maintenance — the ingestion path of a
     * 100 TB vector index, where embeddings arrive daily and a full
@@ -372,13 +409,9 @@ object Similarity {
     * both layers ([[prunedLayer]]), so even the read side follows the
     * probe set, not the corpus (measured flat across 100× in
     * SCALING.md).
-    */
-  private[graft] def embRelation(s: SparkSession, d: String): DataFrame =
-    embeddings(s, d)
-      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-
-  /** Frozen coarse quantizer: trained on base vectors only, memoized
-    * under a key disjoint from the full-corpus quantizer's.
+    *
+    * The frozen coarse quantizer is trained on base vectors only and
+    * memoized under a key disjoint from the full-corpus quantizer's.
     */
   private[graft] def baseIvfCentroids(s: SparkSession, d: String,
       delta: Delta = Delta.Embeddings): Array[Array[Double]] =
@@ -497,12 +530,8 @@ object Similarity {
     */
   private[graft] def probedCentIds(s: SparkSession, d: String,
       maxQ: Long = 20): Seq[Int] = {
-    val cents = baseIvfCentroids(s, d)
-    embRelation(s, d).filter(col("vec_id") < maxQ)
-      .select(explode(graft.functions.VectorFunctions.nearest_centroids(
-        col("v"), typedLit(cents.map(_.toSeq).toSeq), IvfProbes))
-        .as("cent_id"))
-      .distinct().collect().map(_.getInt(0)).sorted.toSeq
+    queryProbes(embRelation(s, d), baseIvfCentroids(s, d), maxQ)
+      .select("cent_id").distinct().collect().map(_.getInt(0)).sorted.toSeq
   }
 
   def annIvfIncremental(s: SparkSession, d: String): DataFrame =
@@ -527,7 +556,9 @@ object Similarity {
     val probed = probedCentIds(s, d, maxQ)
     val pruned = (prunedLayer(s, baseIvfPostingsPath(s, d), probed) ++
       prunedLayer(s, deltaIvfPostingsPath(s, d), probed))
-      .reduce(_.unionByName(_))
+      .reduceOption(_.unionByName(_))
+      // no probed cell has a directory (an empty corpus): no candidates
+      .getOrElse(emb.withColumn("cent_id", lit(0)).filter(lit(false)))
     ivfAnswer(pruned, baseIvfCentroids(s, d), emb, maxQ)
   }
 
@@ -538,10 +569,10 @@ object Similarity {
     * compression; at 100 TB the codes fit where raw vectors cannot,
     * and the ADC scan streams codes, not floats).
     *
-    * Training mirrors ivfCentroids' determinism contract (init = first
-    * PqK vectors' sub-slices, per-round 6-dp centroid rounding) but
-    * trains ALL subspaces in one DataFrame pass per Lloyd round: rows
-    * explode to (m, subvector) and each row's codebook is selected
+    * Training is the IVF quantizer's kernel run once per subspace:
+    * driver-side [[lloyd]] rounds over the sample's sub-slices, init =
+    * the first PqK sample vectors' sub-slices, per-round 6-dp centroid
+    * rounding. Encoding the corpus selects each subspace's codebook
     * with element_at on ONE nested codebook literal — the same
     * compile-once property as NearestCentroids.
     *
@@ -575,73 +606,19 @@ object Similarity {
     * means, saturated by a fixed-size sample — FAISS's `train`
     * contract; ENCODING the corpus (pqCodeTable) stays full-corpus,
     * that is the `add` half. Init = the first `PqK` sample vectors'
-    * sub-slices by vec_id (identical to the previous full-corpus init
-    * whenever the sample is the corpus, i.e. at both gate scales).
-    *
-    * The Lloyd rounds run DRIVER-SIDE over the one collected sample
-    * (r18): the sample is TrainSampleN×64 doubles (~1 MB — bounded by
-    * construction, so this is not a §5 driver-data-work violation),
-    * while each round as a Spark job (explode → assign → posexplode →
-    * 16k-group agg → collect) paid ~2.5 s of job/codegen fixed cost
-    * for ~60 Mflops of arithmetic. One bounded collect replaces
-    * PqIters+1 jobs. Semantics preserved exactly: same cosine
-    * arithmetic (CosineSim.compute's accumulation order), same
-    * lowest-index tie-break as NearestCentroids' (-sim, idx) sort,
-    * same per-(m,code,dim) mean in the sample's vec_id order, same
-    * 6-dp HALF_UP rounding, codewords with no members keep their
-    * previous value — verified by byte-diffing every consumer query's
-    * output at sf0.001/0.01/0.1 against the pre-change dump.
+    * sub-slices by vec_id, wrapped round when the sample holds fewer
+    * (identical to the previous full-corpus init whenever the sample
+    * is the corpus, i.e. at both gate scales). An empty sample trains
+    * empty codebooks, which encode and decode nothing.
     */
   private def trainPqCodebooks(s: SparkSession, d: String)
       : Array[Array[Array[Double]]] = {
-    val emb = embeddings(s, d)
-      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    val rows = trainingSample(emb).orderBy("vec_id")
-      .select("v").collect().map(_.getSeq[Double](0).toArray)
-    val init = rows.take(PqK)
-    var cb: Array[Array[Array[Double]]] = Array.tabulate(PqM, PqK) {
-      (m, k) => init(k % init.length).slice(m * PqSub, (m + 1) * PqSub)
-    }
-    def cos(a: Array[Double], aOff: Int, b: Array[Double]): Double = {
-      var d0 = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < PqSub) {
-        val x = a(aOff + i); val y = b(i)
-        d0 += x * y; na += x * x; nb += y * y
-        i += 1
-      }
-      d0 / (math.sqrt(na) * math.sqrt(nb))
-    }
-    for (_ <- 1 to PqIters) {
-      val sum = Array.ofDim[Double](PqM, PqK, PqSub)
-      val cnt = Array.ofDim[Long](PqM, PqK)
-      rows.foreach { v =>
-        var m = 0
-        while (m < PqM) {
-          // argmax by cosine in the NearestCentroids sort order
-          // (`beats`); all-NaN degenerates to 0, also like the sort
-          var best = 0; var bestSim = Double.NegativeInfinity
-          var k = 0
-          while (k < PqK) {
-            val sim = cos(v, m * PqSub, cb(m)(k))
-            if (beats(sim, bestSim)) { best = k; bestSim = sim }
-            k += 1
-          }
-          cnt(m)(best) += 1
-          val ss = sum(m)(best)
-          var i = 0
-          while (i < PqSub) { ss(i) += v(m * PqSub + i); i += 1 }
-          m += 1
-        }
-      }
-      cb = Array.tabulate(PqM, PqK) { (m, k) =>
-        if (cnt(m)(k) == 0L) cb(m)(k).clone()
-        else Array.tabulate(PqSub) { i =>
-          BigDecimal(sum(m)(k)(i) / cnt(m)(k))
-            .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-        }
-      }
-    }
-    cb
+    val rows = sampleRows(embRelation(s, d))
+    val init = if (rows.isEmpty) rows
+      else Array.tabulate(PqK)(k => rows(k % rows.length))
+    def sub(vs: Array[Array[Double]], m: Int) =
+      vs.map(_.slice(m * PqSub, (m + 1) * PqSub))
+    Array.tabulate(PqM)(m => lloyd(sub(rows, m), sub(init, m), PqIters))
   }
 
   /** Trained codebooks, memoized TWICE: per-corpus scratch parquet
@@ -657,14 +634,12 @@ object Similarity {
             graft.util.ScratchIndex.corpusTag(d)) {
         val cb = trainPqCodebooks(s, d)
         import s.implicits._
-        (for { m <- 0 until PqM; k <- 0 until PqK }
+        (for { m <- 0 until PqM; k <- cb(m).indices }
           yield (m, k, cb(m)(k).toSeq)).toDF("m", "k", "vals")
       }
-      val cb = Array.ofDim[Array[Double]](PqM, PqK)
-      df.collect().foreach { r =>
-        cb(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](2).toArray
-      }
-      cb
+      val words = df.collect()
+        .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2).toArray).toMap
+      Array.tabulate(PqM, words.size / PqM)((m, k) => words((m, k)))
     })
 
   /** The stored code table — (vec_id, codes): what a production PQ
@@ -676,40 +651,39 @@ object Similarity {
   private[graft] def pqCodeTable(s: SparkSession, d: String): DataFrame = {
     val cb = pqLit(pqCodebooks(s, d))
     val codes = array((0 until PqM).map { m =>
-      element_at(graft.functions.VectorFunctions.nearest_centroids(
+      element_at(nearest_centroids(
         slice(col("v"), m * PqSub + 1, PqSub),
         element_at(cb, m + 1), 1), 1)
     }: _*)
     graft.util.ScratchIndex.materialize(
         s, s"pqcodes_v1_m${PqM}k${PqK}_" +
           graft.util.ScratchIndex.corpusTag(d)) {
-      embeddings(s, d)
-        .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-        .select(col("vec_id"), codes.as("codes"))
+      embRelation(s, d).select(col("vec_id"), codes.as("codes"))
     }
   }
 
+  /** v̂ of a row's `codes`: its codewords stitched back together. */
+  private def pqDecode(cb: Column): Column =
+    flatten(array((0 until PqM).map { m =>
+      element_at(element_at(cb, m + 1), element_at(col("codes"), m + 1) + 1)
+    }: _*))
+
   def annPq(s: SparkSession, d: String): DataFrame = {
-    val emb = embeddings(s, d)
-      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
+    val emb = embRelation(s, d)
     val cb = pqLit(pqCodebooks(s, d))
 
     // the query path streams the STORED code table and reconstructs
-    // v̂ by stitching codewords back together — pure built-ins; the
-    // corpus encode happened once at index-build time (pqCodeTable)
-    val decoded = pqCodeTable(s, d).select(col("vec_id"),
-      flatten(array((0 until PqM).map { m =>
-        element_at(element_at(cb, m + 1),
-          element_at(col("codes"), m + 1) + 1)
-      }: _*)).as("vhat"))
+    // v̂ — pure built-ins; the corpus encode happened once at
+    // index-build time (pqCodeTable)
+    val decoded = pqCodeTable(s, d)
+      .select(col("vec_id"), pqDecode(cb).as("vhat"))
 
     val queries = emb.filter(col("vec_id") < 20)
       .select(col("vec_id").as("q_id"), col("v").as("q"))
     val cand = decoded.crossJoin(broadcast(queries))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
-        round(graft.functions.VectorFunctions
-          .cosine_sim(col("q"), col("vhat")), 6).as("cos_approx"))
+        round(cosine_sim(col("q"), col("vhat")), 6).as("cos_approx"))
     rerankTop3(emb, queries, cand, col("cos_approx"))
   }
 
@@ -737,19 +711,10 @@ object Similarity {
       .withColumn("arank", row_number().over(wa))
       .filter(col("arank") <= depth)
       .drop("arank")
-    val exact = shortlist
+    topKByCosine(shortlist
       .join(emb, "vec_id")
-      .join(broadcast(queries), "q_id")
-      .select(col("q_id"), col("vec_id"), col("cos_approx"),
-        round(graft.functions.VectorFunctions.cosine_sim(col("q"), col("v")), 6)
-          .as("cos_sim"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(desc("cos_sim"), asc("vec_id"))
-    exact.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 3)
-      .select(col("q_id"), col("rank"), col("vec_id"),
-        col("cos_approx"), col("cos_sim"))
-      .orderBy("q_id", "rank")
+      .join(broadcast(queries), "q_id"), 3,
+      Seq("q_id", "rank", "vec_id", "cos_approx", "cos_sim"))
   }
 
   /** IVF-PQ: the full composed index — IVF posting lists bound the
@@ -763,8 +728,7 @@ object Similarity {
     * SimilarityEventsSpec.
     */
   def annIvfPq(s: SparkSession, d: String): DataFrame = {
-    val emb = embeddings(s, d)
-      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
+    val emb = embRelation(s, d)
     val cents = ivfCentroids(s, d)
     val cb = pqLit(pqCodebooks(s, d))
 
@@ -780,21 +744,12 @@ object Similarity {
         .select(col("cent_id"), col("vec_id"), col("codes"))
     }
 
-    val qProbe = emb.filter(col("vec_id") < 20)
-      .withColumn("cent_id",
-        explode(graft.functions.VectorFunctions.nearest_centroids(
-          col("v"), typedLit(cents.map(_.toSeq).toSeq), IvfProbes)))
-      .select(col("vec_id").as("q_id"), col("v").as("q"), col("cent_id"))
-
+    val qProbe = queryProbes(emb, cents)
     val cand = index.join(broadcast(qProbe), Seq("cent_id"))
       .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("vhat", flatten(array((0 until PqM).map { m =>
-        element_at(element_at(cb, m + 1),
-          element_at(col("codes"), m + 1) + 1)
-      }: _*)))
+      .withColumn("vhat", pqDecode(cb))
       .select(col("q_id"), col("vec_id"),
-        round(graft.functions.VectorFunctions
-          .cosine_sim(col("q"), col("vhat")), 6).as("cos_approx"))
+        round(cosine_sim(col("q"), col("vhat")), 6).as("cos_approx"))
     // 3x the flat-PQ refine depth: the composed index's shortlist is
     // built from code scores WITHIN two probed cells, where the 8-byte
     // codes blur a denser candidate field than the global PQ scan's --
@@ -815,27 +770,22 @@ object Similarity {
     * with id tie-breaks, as everywhere.
     */
   def embCosinePairs(s: SparkSession, d: String): DataFrame = {
-    val e = embeddings(s, d).filter(col("vec_id") < 300)
-      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
+    val e = embRelation(s, d).filter(col("vec_id") < 300)
     val a = e.select(col("vec_id").as("a_id"), col("v").as("a_v"))
     val b = e.select(col("vec_id").as("b_id"), col("v").as("b_v"))
     a.join(b, col("a_id") < col("b_id"))
       .select(col("a_id"), col("b_id"),
-        round(graft.functions.VectorFunctions
-          .cosine_sim(col("a_v"), col("b_v")), 6).as("cos_sim"))
+        round(cosine_sim(col("a_v"), col("b_v")), 6).as("cos_sim"))
       .orderBy(desc("cos_sim"), asc("a_id"), asc("b_id"))
       .limit(100)
   }
 
   val embCosinePairsSql: String =
-    """WITH e AS (
+    s"""WITH e AS (
       |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
       |  WHERE vec_id < 300
       |)
-      |SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-      |       round(list_dot_product(a.v, b.v)
-      |             / (sqrt(list_dot_product(a.v, a.v))
-      |                * sqrt(list_dot_product(b.v, b.v))), 6) AS cos_sim
+      |SELECT a.vec_id AS a_id, b.vec_id AS b_id, ${cosSql("a.v", "b.v")} AS cos_sim
       |FROM e a JOIN e b ON a.vec_id < b.vec_id
       |ORDER BY cos_sim DESC, a_id, b_id LIMIT 100""".stripMargin
 
@@ -848,7 +798,19 @@ object Similarity {
     * (actual, predicted) matrix. The quality diagnostic run before
     * trusting an embedding space for retrieval or dedup.
     */
-  def centroidClassify(s: SparkSession, d: String): DataFrame = {
+  def centroidClassify(s: SparkSession, d: String): DataFrame =
+    nearestLabel(s, d, "label", "vec_id")
+      .groupBy(col("label"), col("c_label").as("predicted"))
+      .agg(count(lit(1)).as("n"))
+      .orderBy("label", "predicted")
+
+  /** Every embedding's nearest label centroid, shared by
+    * [[centroidClassify]] and [[semanticDedup]]: (`keep`…, c_label,
+    * cos, rk) rows of rank 1, where `keep` are columns of (label,
+    * vec_id, v) and the ranking is by rounded cosine with c_label
+    * tie-break.
+    */
+  private def nearestLabel(s: SparkSession, d: String, keep: String*): DataFrame = {
     val e = embeddings(s, d)
       .select(col("label"), col("vec_id"), asDouble(col("embedding")).as("v"))
     val cents = e
@@ -858,22 +820,22 @@ object Similarity {
       .agg(round(avg(col("x")), 6).as("m"))
       .groupBy(col("c_label"))
       .agg(transform(array_sort(collect_list(struct(col("dim"), col("m")))),
-        s => s.getField("m")).as("cv"))
-    val scored = e.crossJoin(broadcast(cents))
-      .select(col("label"), col("vec_id"), col("c_label"),
-        round(graft.functions.VectorFunctions.cosine_sim(col("v"), col("cv")),
-          6).as("cos"))
+        f => f.getField("m")).as("cv"))
     val w = Window.partitionBy(col("vec_id"))
       .orderBy(desc("cos"), asc("c_label"))
-    scored.withColumn("rk", row_number().over(w))
+    e.crossJoin(broadcast(cents))
+      .select(keep.map(col) ++ Seq(col("c_label"),
+        round(cosine_sim(col("v"), col("cv")), 6).as("cos")): _*)
+      .withColumn("rk", row_number().over(w))
       .filter(col("rk") === 1)
-      .groupBy(col("label"), col("c_label").as("predicted"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy("label", "predicted")
   }
 
-  val centroidClassifySql: String =
-    """WITH e AS (
+  /** The oracle's replay of [[nearestLabel]] up to its scoring: CTEs
+    * e, cd, cents and scored, whose rows carry `keep` (columns of e),
+    * c_label and cos.
+    */
+  private def nearestLabelCtes(keep: String): String =
+    s"""WITH e AS (
       |  SELECT label, vec_id, embedding::DOUBLE[] AS v FROM embeddings
       |), cd AS (
       |  SELECT label AS c_label, dim, round(avg(x), 6) AS m
@@ -883,12 +845,12 @@ object Similarity {
       |), cents AS (
       |  SELECT c_label, list(m ORDER BY dim) AS cv FROM cd GROUP BY 1
       |), scored AS (
-      |  SELECT e.label, e.vec_id, c.c_label,
-      |         round(list_dot_product(e.v, c.cv)
-      |               / (sqrt(list_dot_product(e.v, e.v))
-      |                  * sqrt(list_dot_product(c.cv, c.cv))), 6) AS cos
+      |  SELECT $keep, c.c_label, ${cosSql("e.v", "c.cv")} AS cos
       |  FROM e CROSS JOIN cents c
-      |), best AS (
+      |)""".stripMargin
+
+  val centroidClassifySql: String =
+    s"""${nearestLabelCtes("e.label, e.vec_id")}, best AS (
       |  SELECT label, vec_id, c_label,
       |         row_number() OVER (PARTITION BY vec_id
       |                            ORDER BY cos DESC, c_label) AS rk
@@ -937,8 +899,7 @@ object Similarity {
     * left-to-right in both, so the doubles agree bitwise.
     */
   def quantizeInt8(s: SparkSession, d: String): DataFrame =
-    embeddings(s, d)
-      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
+    embRelation(s, d)
       .withColumn("scale",
         aggregate(col("v"), lit(0.0),
           (acc, x) => greatest(acc, abs(x))) / 127.0)
@@ -996,8 +957,7 @@ object Similarity {
     graft.util.ScratchIndex.materialize(
       s, s"knngraph_v1_${graft.util.ScratchIndex.corpusTag(d)}") {
       val cents = ivfCentroids(s, d)
-      val assigned = embeddings(s, d)
-        .select(col("vec_id"), asDouble(col("embedding")).as("v"))
+      val assigned = embRelation(s, d)
         .withColumn("cent_id", bestCentroid(cents))
       val a = assigned.select(col("cent_id"), col("vec_id"), col("v"))
       val b = assigned.select(col("cent_id"), col("vec_id").as("dst"),
@@ -1007,8 +967,7 @@ object Similarity {
       a.join(b, Seq("cent_id"))
         .filter(col("vec_id") =!= col("dst"))
         .select(col("vec_id"), col("dst"),
-          round(graft.functions.VectorFunctions
-            .cosine_sim(col("v"), col("w")), 6).as("sim"))
+          round(cosine_sim(col("v"), col("w")), 6).as("sim"))
         .withColumn("r", row_number().over(w))
         .filter(col("r") <= GraphDegree)
         .select(col("vec_id").as("src"), col("dst"))
@@ -1022,15 +981,10 @@ object Similarity {
     * relation — candidates stay O(seeds × degree), never corpus-sized.
     */
   def annGraph(s: SparkSession, d: String): DataFrame = {
-    val emb = embeddings(s, d)
-      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
+    val emb = embRelation(s, d)
     val cents = ivfCentroids(s, d)
     val assigned = emb.withColumn("cent_id", bestCentroid(cents))
-    val qProbe = emb.filter(col("vec_id") < 20)
-      .withColumn("cent_id",
-        explode(graft.functions.VectorFunctions.nearest_centroids(
-          col("v"), typedLit(cents.map(_.toSeq).toSeq), IvfProbes)))
-      .select(col("vec_id").as("q_id"), col("cent_id"))
+    val qProbe = queryProbes(emb, cents).select(col("q_id"), col("cent_id"))
     val seeds = assigned.join(broadcast(qProbe), Seq("cent_id"))
       .select(col("q_id"), col("vec_id"))
     val hop = seeds
@@ -1038,18 +992,10 @@ object Similarity {
       .select(col("q_id"), col("dst").as("vec_id"))
     val cand = seeds.unionByName(hop)
       .filter(col("vec_id") =!= col("q_id")).distinct()
-    val scored = cand
+    topKByCosine(cand
       .join(emb, "vec_id")
       .join(broadcast(emb.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("q_id"), col("v").as("q"))), "q_id")
-      .select(col("q_id"), col("vec_id"),
-        round(graft.functions.VectorFunctions.cosine_sim(col("q"), col("v")), 6)
-          .as("cos_sim"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(desc("cos_sim"), asc("vec_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 3)
-      .orderBy("q_id", "rank")
+        .select(col("vec_id").as("q_id"), col("v").as("q"))), "q_id"), 3)
   }
 
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023,
@@ -1071,24 +1017,7 @@ object Similarity {
   private val SemDedupTau = 0.35
 
   def semanticDedup(s: SparkSession, d: String): DataFrame = {
-    val e = embeddings(s, d)
-      .select(col("label"), col("vec_id"), asDouble(col("embedding")).as("v"))
-    val cents = e
-      .select(col("label").as("c_label"),
-        posexplode(col("v")).as(Seq("dim", "x")))
-      .groupBy(col("c_label"), col("dim"))
-      .agg(round(avg(col("x")), 6).as("m"))
-      .groupBy(col("c_label"))
-      .agg(transform(array_sort(collect_list(struct(col("dim"), col("m")))),
-        f => f.getField("m")).as("cv"))
-    val scored = e.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("v"), col("c_label"),
-        round(graft.functions.VectorFunctions.cosine_sim(col("v"), col("cv")),
-          6).as("cos"))
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(desc("cos"), asc("c_label"))
-    val asg = scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") === 1)
+    val asg = nearestLabel(s, d, "vec_id", "v")
       .select(col("c_label").as("cluster"), col("vec_id"), col("v"))
     val a = asg.select(col("cluster"), col("vec_id").as("a_id"),
       col("v").as("a_v"))
@@ -1097,8 +1026,7 @@ object Similarity {
     val pairs = a.join(b, Seq("cluster"))
       .filter(col("a_id") < col("b_id"))
       .select(col("cluster"), col("a_id"), col("b_id"),
-        round(graft.functions.VectorFunctions.cosine_sim(
-          col("a_v"), col("b_v")), 6).as("cos"))
+        round(cosine_sim(col("a_v"), col("b_v")), 6).as("cos"))
       .filter(col("cos") >= SemDedupTau)
     val nPairs = pairs.groupBy(col("cluster"))
       .agg(count(lit(1)).as("n_dup_pairs"))
@@ -1115,22 +1043,7 @@ object Similarity {
   }
 
   val semanticDedupSql: String =
-    """WITH e AS (
-      |  SELECT label, vec_id, embedding::DOUBLE[] AS v FROM embeddings
-      |), cd AS (
-      |  SELECT label AS c_label, dim, round(avg(x), 6) AS m
-      |  FROM (SELECT label, generate_subscripts(v, 1) AS dim,
-      |               unnest(v) AS x FROM e)
-      |  GROUP BY 1, 2
-      |), cents AS (
-      |  SELECT c_label, list(m ORDER BY dim) AS cv FROM cd GROUP BY 1
-      |), scored AS (
-      |  SELECT e.vec_id, e.v, c.c_label,
-      |         round(list_dot_product(e.v, c.cv)
-      |               / (sqrt(list_dot_product(e.v, e.v))
-      |                  * sqrt(list_dot_product(c.cv, c.cv))), 6) AS cos
-      |  FROM e CROSS JOIN cents c
-      |), asg AS (
+    s"""${nearestLabelCtes("e.vec_id, e.v")}, asg AS (
       |  SELECT c_label AS cluster, vec_id, v FROM (
       |    SELECT vec_id, v, c_label,
       |           row_number() OVER (PARTITION BY vec_id
@@ -1138,9 +1051,7 @@ object Similarity {
       |    FROM scored) WHERE rk = 1
       |), p0 AS (
       |  SELECT a.cluster, a.vec_id AS a_id, b.vec_id AS b_id,
-      |         round(list_dot_product(a.v, b.v)
-      |               / (sqrt(list_dot_product(a.v, a.v))
-      |                  * sqrt(list_dot_product(b.v, b.v))), 6) AS cos
+      |         ${cosSql("a.v", "b.v")} AS cos
       |  FROM asg a JOIN asg b
       |    ON a.cluster = b.cluster AND a.vec_id < b.vec_id
       |), p AS (
@@ -1179,29 +1090,18 @@ object Similarity {
         col("v").as("q"))
     // equi-join on the filter column: the label predicate prunes the
     // candidate set BEFORE any distance is computed
-    val scored = emb.join(broadcast(queries),
-        col("label") === col("q_label") && col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        round(graft.functions.VectorFunctions.cosine_sim(col("q"), col("v")), 6)
-          .as("cos_sim"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(desc("cos_sim"), asc("vec_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 5)
-      .select(col("q_id"), col("rank"), col("vec_id"), col("cos_sim"))
-      .orderBy("q_id", "rank")
+    topKByCosine(emb.join(broadcast(queries),
+        col("label") === col("q_label") && col("vec_id") =!= col("q_id")), 5,
+      Seq("q_id", "rank", "vec_id", "cos_sim"))
   }
 
   val knnFilteredSql: String =
-    """WITH e AS (
+    s"""WITH e AS (
       |  SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings
       |), q AS (
       |  SELECT vec_id AS q_id, label AS q_label, v AS q FROM e WHERE vec_id < 5
       |), scored AS (
-      |  SELECT q_id, e.vec_id,
-      |         round(list_dot_product(q, v)
-      |               / (sqrt(list_dot_product(q, q)) * sqrt(list_dot_product(v, v))),
-      |               6) AS cos_sim
+      |  SELECT q_id, e.vec_id, ${cosSql("q", "v")} AS cos_sim
       |  FROM e JOIN q ON e.label = q.q_label AND e.vec_id <> q.q_id
       |), ranked AS (
       |  SELECT q_id, vec_id, cos_sim,

@@ -255,33 +255,19 @@ object Profile {
 
   /** Does the training-sample cap degrade the IVF quantizer where it
     * binds? Mean cosine distortion (1 − cos to the assigned centroid)
-    * over the full corpus, shipped sample-trained centroids vs the same
-    * Lloyd run uncapped (cosine assignment, lowest-index ties, 6-dp
-    * HALF_UP means, init = first IvfK by vec_id).
+    * over the full corpus, shipped sample-trained centroids vs the
+    * same kernel ([[Similarity.lloyd]]) run uncapped, init = the
+    * corpus's first IvfK vectors by vec_id.
     */
   private def trainQuality(s: SparkSession, d: String): Unit = {
     val all = Similarity.embRelation(s, d).select(col("vec_id"), col("v")).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1).map(_._2)
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      var dp = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) { dp += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-      if (na == 0 || nb == 0) 0.0 else dp / math.sqrt(na * nb)
-    }
-    // maxBy keeps the first maximum: lowest-index ties
-    def assign(v: Array[Double], cents: Array[Array[Double]]): Int =
-      cents.indices.maxBy(c => cos(v, cents(c)))
     def distortion(cents: Array[Array[Double]]): Double =
-      all.map(v => 1.0 - cos(v, cents(assign(v, cents)))).sum / all.length
-    val k = Similarity.IvfK
-    var cents = all.take(k).map(_.clone())
-    for (_ <- 1 to Similarity.IvfIters) {
-      val members = all.groupBy(assign(_, cents)) // corpus order within a cell
-      cents = Array.tabulate(k)(c => members.get(c).fold(cents(c))(vs =>
-        vs.transpose.map(xs => BigDecimal(xs.sum / vs.length)
-          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)))
-    }
+      all.map(v => 1.0 - Similarity.cosine(v, cents(Similarity.nearest(v, cents))))
+        .sum / all.length
     val dSampled = distortion(Similarity.ivfCentroids(s, d))
-    val dFull = distortion(cents)
+    val dFull = distortion(
+      Similarity.lloyd(all, all.take(Similarity.IvfK), Similarity.IvfIters))
     println(f"[trainquality] corpus=${all.length} " +
       f"sampled-train distortion=$dSampled%.6f " +
       f"full-train distortion=$dFull%.6f ratio=${dSampled / dFull}%.4f")

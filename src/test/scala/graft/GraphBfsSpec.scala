@@ -28,6 +28,10 @@ class GraphBfsSpec extends SparkTestBase {
       val d = dir.toString
       assert(SparkEntry.queries("graph_bfs_hops")(spark, d).count() === 0L)
       assert(SparkEntry.queries("graph_degree_hist")(spark, d).count() === 0L)
+      // an edge-less graph closes no triangle: 0, as DuckDB's count(*)
+      val tri = SparkEntry.queries("graph_triangles")(spark, d)
+        .select("n_triangles").collect()
+      assert(tri.map(_.get(0)).toSeq === Seq(0L))
       val counts = LoopScope.scoped(sc => Graph.bfsWalk(sc, spark, d)._2)
       assert(counts === Seq(0L))
     } finally ScratchIndex.deleteRecursively(dir)

@@ -391,16 +391,10 @@ class SimilarityEventsSpec extends SparkTestBase {
 
   test("Lloyd argmax picks the centroid NearestCentroids ranks first") {
     import org.apache.spark.sql.catalyst.util.GenericArrayData
-    import graft.functions.{CosineSim, NearestCentroids}
+    import graft.functions.NearestCentroids
     def arr(xs: Seq[Double]) = new GenericArrayData(xs.map(x => x: Any).toArray)
-    def lloyd(v: Seq[Double], m: Seq[Seq[Double]]): Int = {
-      var best = 0; var bestSim = Double.NegativeInfinity
-      m.indices.foreach { c =>
-        val sim = CosineSim.compute(arr(v), arr(m(c)))
-        if (Similarity.beats(sim, bestSim)) { best = c; bestSim = sim }
-      }
-      best
-    }
+    def lloyd(v: Seq[Double], m: Seq[Seq[Double]]): Int =
+      Similarity.nearest(v.toArray, m.map(_.toArray).toArray)
     def sorted(v: Seq[Double], m: Seq[Seq[Double]]): Int =
       NearestCentroids.compute(arr(v),
         new GenericArrayData(m.map(c => arr(c): Any).toArray), 1).getInt(0)
@@ -414,5 +408,20 @@ class SimilarityEventsSpec extends SparkTestBase {
     val zeroCentroid = (Seq(1.0, 2.0, 0.0), Seq(Seq(0.0, 0.0, 0.0), Seq(-1.0, 0.0, 0.0)))
     for ((v, m) <- Seq(signedZero, zeroVector, zeroCentroid))
       assert(lloyd(v, m) === sorted(v, m), s"v=$v m=$m")
+  }
+
+  test("an empty embeddings table answers every similarity query with 0 rows") {
+    // a temp corpus of sf0.001's embeddings schema and no rows: the
+    // quantizer, the PQ codebooks and the probe set are all empty
+    val dir = java.nio.file.Files.createTempDirectory("emptyembed").toFile
+    try {
+      spark.read.parquet(s"$sf/embeddings.parquet").limit(0)
+        .write.parquet(s"$dir/embeddings.parquet")
+      val got = Similarity.queries.toSeq.sortBy(_._1).map { case (name, q) =>
+        name -> scala.util.Try(q(spark, dir.toString).count())
+      }
+      val bad = got.filterNot(_._2 == scala.util.Success(0L))
+      assert(bad.isEmpty, bad.mkString("; "))
+    } finally graft.util.ScratchIndex.deleteRecursively(dir)
   }
 }
